@@ -1,6 +1,8 @@
 package graft.dedup
 
 import graft.Tables
+import graft.ops.StandingIndex
+import graft.ops.StandingIndex.{Bucketed, Plain, Sink}
 import graft.text.Text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -16,6 +18,15 @@ import org.apache.spark.sql.functions._
   * pairing, never an all-pairs join. The exact Jaccard query is the
   * *baseline oracle* and is deliberately restricted to within-source
   * pairs; at 100 TB you run the LSH variants and verify only candidates.
+  *
+  * The standing gram and shingle indexes (plain and bucketed) are
+  * DECLARATIONS over the one [[graft.ops.StandingIndex]] lifecycle, and
+  * every similarity-join regime takes the posting form — documents reach
+  * it through the single [[shinglePostingsOf]] adapter. The regime and
+  * index measurements behind the constants here (τ crossover, pair
+  * composition, pair shuffle, index A/Bs) are recorded in BENCHMARKS.md;
+  * the one-off probes that took them were retired, and `tools.QueryProbe`
+  * times any registered query today.
   */
 object Dedup {
 
@@ -263,7 +274,7 @@ object Dedup {
     * different lengths — at sf0.1 it surfaced 6 of the 590 true τ ≥ 0.05
     * pairs. DedupSpec pins the subset relation. */
   def nearDupPairs(spark: SparkSession, d: String): DataFrame =
-    similarityJoin(Tables.documents(spark, d), tauNum = 1, tauDen = 20)
+    similarityJoinOf(Tables.documents(spark, d), tauNum = 1, tauDen = 20)
 
   /** All within-block Jaccard pairs (doc_a, doc_b, jaccard) — the
     * BLOCKED teaching baseline (block keys: source, lang, length
@@ -306,9 +317,212 @@ object Dedup {
           (size(col("a.hs")) + size(col("b.hs")) - col("inter"))).as("jaccard"))
   }
 
-  /** Exact set-similarity self-join via PREFIX FILTERING (Chaudhuri et al.
-    * ICDE'06 / Xiao et al. PPJoin, WWW'08) — ALL pairs with shingle-set
-    * Jaccard ≥ τ, with no blocking assumption and no all-pairs scan:
+  /** High-τ dispatch threshold: the largest pair-rows-per-posting ratio
+    * (Σ_g df·(df−1)/2 over Σ_g df — the posting join's EXACT output size
+    * per input row) at which the posting-count plan is still preferred.
+    * Bracketed by the round-7 measurements (BENCHMARKS.md "τ-dispatch
+    * crossover"): every GenScale corpus sits at ratio 0.5–4.9 and there
+    * posting-count beats prefix+verify at EVERY τ ≤ 1/2 probed (sf1:
+    * 2.3 vs 3.4 s, 22 vs 91 MB shuffle; sf10: 25 vs 47+ s, 3.4 vs
+    * 9–11 GB shuffle, 2.5 vs 10–20 GB spill); one planted hot gram
+    * (df = corpus) pushes the ratio to 51.5 and there prefix wins 2.9×
+    * already at 5k docs, diverging as df² vs linear thereafter. */
+  val PostingMaxPairRowsPerPosting: Double = graft.Tuning.PostingMaxPairRowsPerPosting
+
+  /** One cheap scan answering "how heavy is the gram-df tail?" — the
+    * runtime statistic the [[similarityJoin]] dispatch keys on: one
+    * g-keyed aggregation of the posting frame, no join, nothing
+    * data-sized collected (over the bucketed standing table the groupBy
+    * plans exchange-free). Callers that track corpus statistics skip it
+    * via the hint parameter. */
+  def probePairRowsPerPosting(posting: DataFrame): Double = {
+    // The statistic is blind to partitioning, so any repartition below
+    // it is dropped: the docs adapter's doc_id exchange exists for the
+    // joins (it makes their pair aggregation local), and the probe
+    // shuffles partial counts once, on g, without it.
+    val unbarriered = org.apache.spark.sql.GraftBridge.ofRows(
+      posting.sparkSession,
+      org.apache.spark.sql.GraftBridge.analyzed(posting).transform {
+        case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
+          r.child
+      })
+    val r = unbarriered
+      .groupBy("g").agg(count(lit(1)).as("df"))
+      .agg(sum(col("df") * (col("df") - 1) / 2).as("pair_rows"),
+        sum(col("df")).as("postings"))
+      .head
+    if (r.isNullAt(1) || r.getLong(1) == 0L) 0.0
+    else r.getDouble(0) / r.getLong(1)
+  }
+
+  /** Exact set-similarity self-join — ALL pairs with shingle-set Jaccard
+    * ≥ τ, with no blocking assumption and no all-pairs scan. Takes the
+    * POSTING form (doc_id, n, g) — a standing index's posting half, or
+    * [[shinglePostingsOf]] over documents — plus the doc-keyed `sets`
+    * (doc_id, hs, n) that only the prefix regime's verify step reads.
+    *
+    * Two exact regimes (both return the identical pair set — DedupSpec
+    * pins each against brute force AND against each other at every
+    * probed τ), dispatched on the MEASURED gram-df tail at EVERY τ (the
+    * Percentiles.grouped precedent: one cheap probe picks the physical
+    * regime). The posting join's cost is exactly Σ_g df·(df−1)/2 pair
+    * rows REGARDLESS of τ; prefix filtering sorts hot grams (huge df)
+    * to the end of every doc's rare-first order so they never enter a
+    * prefix. The evidence on both sides of the threshold:
+    *
+    *  - Bounded-df corpus (every GenScale sf: ratio ≈ 0.5–4.9) →
+    *    POSTING-COUNT. At low τ the prefix is nearly the whole set
+    *    ((1−τ)·n + 1 grams), so the prefix plan degenerates into the
+    *    posting join PLUS a df window, a rarity sort, and an
+    *    array-shipping verify — measured at the sf1→sf10 decade: the
+    *    verify grew shuffle write 158× (88 MB → 13.9 GB) with 50 GB of
+    *    SMJ spill, wall 5.5 → 160 s, while the posting plan shuffles
+    *    16-byte pair rows (Vernica et al., SIGMOD'10). At high τ
+    *    posting still wins 1.5–3× wall on this corpus shape.
+    *  - Heavy df tail (ratio 51.5 in the planted corpus-wide-gram
+    *    probe) → PREFIX+VERIFY at every τ. One gram shared by the
+    *    whole corpus makes the posting join QUADRATIC in the corpus:
+    *    measured at sf1, τ=1/20 — posting-count 218 s with 250 GB of
+    *    aggregate spill vs prefix+verify 10.1 s, zero spill (r11; the
+    *    pre-r11 dispatcher sent τ ≤ 1/4 to posting UNCONDITIONALLY and
+    *    rode straight into that cliff). The probe costs one g-keyed
+    *    aggregation — the cheapest insurance in this file.
+    *
+    * τ arrives as a RATIONAL tauNum/tauDen and every threshold comparison
+    * runs in integer math (the q107 winsorized-stats discipline):
+    * `ceil(τ·n)` as `(num·n + den − 1) div den`, the size-ratio prune as
+    * `den·|a| ≥ num·|b|`, the final verify as `den·inter ≥ num·(union)`.
+    * Double arithmetic here is a CORRECTNESS hazard, not a style point:
+    * for τ not representable in binary (0.05, 0.1, …), `ceil(τ·n)` in
+    * doubles rounds UP at exact multiples of 1/τ, silently shortening the
+    * prefix and dropping true pairs — violating the lossless contract
+    * (DedupSpec pins τ = 1/20 against exact all-pairs). */
+  def similarityJoin(posting: DataFrame, sets: DataFrame,
+                     tauNum: Long, tauDen: Long,
+                     pairRowsPerPostingHint: Option[Double] = None): DataFrame = {
+    require(tauNum > 0 && tauDen >= tauNum,
+      s"similarityJoin: tau must be in (0, 1], got $tauNum/$tauDen")
+    val ratio = pairRowsPerPostingHint
+      .getOrElse(probePairRowsPerPosting(posting))
+    if (ratio <= PostingMaxPairRowsPerPosting)
+      similarityJoinPostingCount(posting, tauNum, tauDen)
+    else similarityJoinPrefixVerify(posting, sets, tauNum, tauDen)
+  }
+
+  /** The shingle SETS (doc_id, hs, n) of a document frame — the
+    * shingle indexes' prep and the prefix regime's verify input on the
+    * documents path. The exchange on doc_id is the materialization
+    * barrier (the q31 lesson: without it, codegen defers the
+    * tokenize+shingle projection into the joins and re-evaluates it per
+    * candidate pair), and it leaves the postings doc_id-partitioned, so
+    * a broadcast posting join aggregates its pairs with no shuffle. */
+  def shingleSets(docs: DataFrame): DataFrame = docs
+    .withColumn("toks", Text.tokens)
+    .filter(size(col("toks")) >= 3)
+    .select(col("doc_id"),
+      graft.functions.exprs.gram3SetSorted(col("toks")).as("hs"))
+    .withColumn("n", size(col("hs")))
+    .repartition(col("doc_id"))
+
+  /** The ONE docs → postings adapter: the (doc_id, n, g) posting form
+    * of [[shingleSets]] (q132, the specs, and — sharing the sets frame
+    * with the prefix regime's verify — q31, q59, q73, q81, q103). */
+  def shinglePostingsOf(docs: DataFrame): DataFrame =
+    shinglePostings(shingleSets(docs))
+
+  /** The standing SHINGLE index at `root` — the q125 discipline applied
+    * to the similarity-join family: q31/q73/q81/q103 all start from the
+    * same tokenize + 3-gram-hash pass, so persisting (doc_id, hs, n) once
+    * means every similarity query thereafter reads 8-byte hashes, never
+    * document bytes. One Plain sink of shingle sets; consumers explode
+    * them with [[shinglePostings]]. Ingest counters: (indexed docs,
+    * posting rows). */
+  def shingleIndex(root: String): StandingIndex =
+    StandingIndex(Seq(Sink("sets", root, Plain)), shingleSets, shingleCounters)
+
+  private val shingleCounters =
+    Seq(count(lit(1)).as("docs"), sum(col("n").cast("long")).as("postings"))
+
+  /** The BUCKETED standing shingle index (metastore `table`, key it by
+    * [[graft.ops.Scratch.bucketedTable]]) — the q125 bucketBy treatment
+    * (measured there: consumer-side gram shuffle 1.26 GB → 1.2 MB at
+    * sf10) applied to the similarity family's dominant shuffle, the
+    * posting self-join on `g`. Two sinks, one tokenize pass: the
+    * doc-keyed SETS sidecar (`<table path>_sets`, written FIRST) the
+    * prefix-verify step reads for its hash arrays, then the POSTING
+    * table (doc_id, n, g) bucketed+sorted on g — the df-tail probe, the
+    * posting-count self-join and the prefix regime's df aggregation all
+    * start from HashPartitioning(g, buckets) and plan with NO exchange on
+    * g (PlanAuditSpec pins it). Sinks are named "sets" and "postings". */
+  def shingleIndexBucketed(table: String, buckets: Int = 32): StandingIndex = {
+    val sets = graft.ops.Scale.bucketPath(table) + "_sets"
+    graft.ops.Scratch.track(sets)
+    StandingIndex(Seq(Sink("sets", sets, Plain),
+        Sink("postings", table, Bucketed("g", buckets), shinglePostings)),
+      shingleSets, shingleCounters)
+  }
+
+  /** POSTING form of a shingle frame: one row per (doc, distinct shingle
+    * hash) with the set size carried — the join currency of both
+    * similarity regimes, and the layout the BUCKETED standing index
+    * persists (bucketBy(g) makes every g-keyed join/aggregation over it
+    * exchange-free). */
+  def shinglePostings(sets: DataFrame): DataFrame =
+    // Deliberately NO position column: PPJoin's positional filter was
+    // implemented and MEASURED OUT in round 11 (BENCHMARKS.md "Pair-aggregation
+    // shuffle"): in any global gram order (hash or df), a
+    // shared gram sits at a CORRELATED rank in both docs — both ranks
+    // ≈ the gram's order percentile × n — so the positional bound
+    // min(pos_a, pos_b) + min(n_a−pos_a, n_b−pos_b) ≈ n and prunes only
+    // O(√n) fluctuation beyond what the size-ratio filter already
+    // catches. Measured on the bucketed index: 0.0% of pair rows at
+    // τ=1/20, 0.3% at τ=1/2, while the carried pos column inflated the
+    // plain path's posting exchange ~4%. The textbook filter's wins come
+    // from heterogeneous-length corpora, where the length gap dominates
+    // the bound — and the length filter already prunes those pairs here.
+    sets.select(col("doc_id"), col("n"), explode(col("hs")).as("g"))
+
+  /** [[similarityJoin]]'s LOW-τ regime, public so the crossover stays
+    * measurable (BENCHMARKS.md "τ-dispatch crossover"): |A∩B| is the
+    * COUNT of posting rows the pair shares — one posting self-join + one
+    * partial-agg'd groupBy over 16-byte pair rows (Vernica et al.,
+    * SIGMOD'10 shape); J = inter / (n_a + n_b − inter) needs only the
+    * carried set sizes, so no hash array is ever shuffled after the
+    * explode. Work is Σ_g df(g)² pair rows regardless of τ. On the
+    * bucketed table the g-keyed self-join starts from
+    * HashPartitioning(g, buckets) and plans with no exchange on g. */
+  def similarityJoinPostingCount(posting: DataFrame, tauNum: Long,
+                                 tauDen: Long): DataFrame = {
+    posting.as("a").join(posting.as("b"),
+        col("a.g") === col("b.g") &&
+        col("a.doc_id") < col("b.doc_id") &&
+        // size-ratio prune (J ≥ τ ⇒ τ·|larger| ≤ |smaller|), integer math
+        col("a.n") * lit(tauDen) >= col("b.n") * lit(tauNum) &&
+        col("b.n") * lit(tauDen) >= col("a.n") * lit(tauNum))
+      // the aggregation keys carry s = n_a + n_b, NOT both sizes: the
+      // final threshold and the jaccard only ever use the SUM, and this
+      // exchange is the family's measured dominant cost — the r11
+      // pair-composition probe (BENCHMARKS.md) shows ≥99.9% of its rows
+      // are chance pairs sharing 1–2 grams (map-side partial aggregation
+      // reduces volume ~1%, so every key byte ships), and no LOSSLESS
+      // row prune can touch them: each such row is its pair's only
+      // evidence. Dropping the second size column cut the pair shuffle
+      // 19–23% at sf1/sf10 (BENCHMARKS.md "Pair-aggregation shuffle"; the
+      // raw-repartition variant that skips the useless map-side
+      // aggregate trades bytes for spill at equal wall and adds a plan
+      // barrier — rejected there).
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        (col("a.n") + col("b.n")).as("s"))
+      .agg(count(lit(1)).as("inter"))
+      .filter(col("inter") * lit(tauDen) >=
+        (col("s") - col("inter")) * lit(tauNum))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (col("s") - col("inter")))
+      .select("doc_a", "doc_b", "jaccard")
+  }
+
+  /** [[similarityJoin]]'s HIGH-τ regime, PREFIX FILTERING + sorted-merge
+    * verify (Chaudhuri et al. ICDE'06 / Xiao et al. PPJoin, WWW'08):
     *
     *   1. order every doc's shingles by global rarity (document frequency
     *      asc, hash tiebreak);
@@ -325,408 +539,16 @@ object Dedup {
     * Why it scales: the join key is a *rare-first prefix* shingle — hot
     * shingles (huge df) sort to the end of every doc's order and rarely
     * enter a prefix, so candidate fan-out per key stays small by
-    * construction; the rest is hash joins and one window. This is the
-    * lossless complement to MinHash LSH ([[lshCandidates]]): same
-    * candidate-then-verify shape, but exact (zero false negatives), which
-    * is what "guarantee no τ-duplicates survive" requires at 100 TB.
-    *
-    * The result is order-invariant — ANY global shingle order is correct,
-    * so the hash-based order here and the oracle's exact-string all-pairs
-    * SQL agree exactly (modulo 64-bit shingle-hash collisions, the q31
-    * precedent).
-    *
-    * τ arrives as a RATIONAL tauNum/tauDen and every threshold comparison
-    * runs in integer math (the q107 winsorized-stats discipline):
-    * `ceil(τ·n)` as `(num·n + den − 1) div den`, the size-ratio prune as
-    * `den·|a| ≥ num·|b|`, the final verify as `den·inter ≥ num·(union)`.
-    * Double arithmetic here is a CORRECTNESS hazard, not a style point:
-    * for τ not representable in binary (0.05, 0.1, …), `ceil(τ·n)` in
-    * doubles rounds UP at exact multiples of 1/τ, silently shortening the
-    * prefix and dropping true pairs — violating the lossless contract
-    * (DedupSpec pins τ = 1/20 against exact all-pairs). */
-  /** High-τ dispatch threshold: the largest pair-rows-per-posting ratio
-    * (Σ_g df·(df−1)/2 over Σ_g df — the posting join's EXACT output size
-    * per input row) at which the posting-count plan is still preferred.
-    * Bracketed by the round-7 measurements (BENCHMARKS.md "τ-dispatch
-    * crossover"): every GenScale corpus sits at ratio 0.5–4.9 and there
-    * posting-count beats prefix+verify at EVERY τ ≤ 1/2 probed (sf1:
-    * 2.3 vs 3.4 s, 22 vs 91 MB shuffle; sf10: 25 vs 47+ s, 3.4 vs
-    * 9–11 GB shuffle, 2.5 vs 10–20 GB spill); one planted hot gram
-    * (df = corpus) pushes the ratio to 51.5 and there prefix wins 2.9×
-    * already at 5k docs, diverging as df² vs linear thereafter. */
-  val PostingMaxPairRowsPerPosting: Double = graft.Tuning.PostingMaxPairRowsPerPosting
-
-  /** One cheap scan answering "how heavy is the gram-df tail?" — the
-    * runtime statistic the high-τ [[similarityJoin]] dispatch keys on.
-    * Tokenize + shingle + one aggregation; no join, nothing data-sized
-    * collected. Callers that track corpus statistics skip it via the
-    * hint parameter. */
-  def probePairRowsPerPosting(docs: DataFrame): Double = {
-    val r = docs
-      .withColumn("toks", Text.tokens)
-      .filter(size(col("toks")) >= 3)
-      .select(explode(graft.functions.exprs.gram3SetSorted(col("toks"))).as("g"))
-      .groupBy("g").agg(count(lit(1)).as("df"))
-      .agg(sum(col("df") * (col("df") - 1) / 2).as("pair_rows"),
-        sum(col("df")).as("postings"))
-      .head
-    if (r.isNullAt(1) || r.getLong(1) == 0L) 0.0
-    else r.getDouble(0) / r.getLong(1)
-  }
-
-  /** [[probePairRowsPerPosting]] from a prepped shingle frame — same
-    * statistic (Σ df·(df−1)/2 per posting), computed off the index
-    * instead of re-tokenizing text. */
-  def probePairRowsPerPostingFromShingles(sets: DataFrame): Double =
-    probePairRowsPerPostingFromPostings(shinglePostings(sets))
-
-  /** The same probe off a POSTING frame ([[shinglePostings]] or the
-    * bucketed standing table) — over a bucketed table the groupBy(g)
-    * plans exchange-free. */
-  def probePairRowsPerPostingFromPostings(posting: DataFrame): Double = {
-    val r = posting
-      .groupBy("g").agg(count(lit(1)).as("df"))
-      .agg(sum(col("df") * (col("df") - 1) / 2).as("pair_rows"),
-        sum(col("df")).as("postings"))
-      .head
-    if (r.isNullAt(1) || r.getLong(1) == 0L) 0.0
-    else r.getDouble(0) / r.getLong(1)
-  }
-
-  /** [[similarityJoin]]'s regime dispatcher over a prepped/persisted
-    * shingle frame — same two-step dispatch, with the df-tail probe
-    * running off the index. */
-  def similarityJoinFromShingles(sets: DataFrame, tauNum: Long, tauDen: Long,
-                                 pairRowsPerPostingHint: Option[Double] = None)
-      : DataFrame =
-    similarityJoinFromPostings(shinglePostings(sets), sets, tauNum, tauDen,
-      pairRowsPerPostingHint)
-
-  /** The dispatcher over the index's POSTING + SETS halves — the entry
-    * point for the BUCKETED standing index ([[shingleIndexIngestBucketed]]):
-    * everything g-keyed (the df-tail probe, the posting-count self-join,
-    * the prefix regime's df window input) reads `posting` and, when that
-    * frame is the bucketed table, plans WITHOUT an exchange on g
-    * (PlanAuditSpec pins it); only the prefix regime's verify step reads
-    * the doc-keyed `sets` sidecar for its hash arrays. */
-  def similarityJoinFromPostings(posting: DataFrame, sets: DataFrame,
-                                 tauNum: Long, tauDen: Long,
-                                 pairRowsPerPostingHint: Option[Double] = None)
-      : DataFrame = {
-    require(tauNum > 0 && tauDen >= tauNum,
-      s"similarityJoin: tau must be in (0, 1], got $tauNum/$tauDen")
-    val ratio = pairRowsPerPostingHint
-      .getOrElse(probePairRowsPerPostingFromPostings(posting))
-    if (ratio <= PostingMaxPairRowsPerPosting)
-      similarityJoinPostingCountFromPostings(posting, tauNum, tauDen)
-    else similarityJoinPrefixVerifyFromPostings(posting, sets, tauNum, tauDen)
-  }
-
-  def similarityJoin(docs: DataFrame, tauNum: Long, tauDen: Long,
-                     pairRowsPerPostingHint: Option[Double] = None): DataFrame = {
-    require(tauNum > 0 && tauDen >= tauNum,
-      s"similarityJoin: tau must be in (0, 1], got $tauNum/$tauDen")
-    // Two exact regimes (both return the identical pair set — DedupSpec
-    // pins each against brute force AND against each other at every
-    // probed τ), dispatched on the MEASURED gram-df tail at EVERY τ (the
-    // Percentiles.grouped precedent: one cheap probe picks the physical
-    // regime). The posting join's cost is exactly Σ_g df·(df−1)/2 pair
-    // rows REGARDLESS of τ; prefix filtering sorts hot grams (huge df)
-    // to the end of every doc's rare-first order so they never enter a
-    // prefix. The evidence on both sides of the threshold:
-    //
-    //  - Bounded-df corpus (every GenScale sf: ratio ≈ 0.5–4.9) →
-    //    POSTING-COUNT. At low τ the prefix is nearly the whole set
-    //    ((1−τ)·n + 1 grams), so the prefix plan degenerates into the
-    //    posting join PLUS a df window, a rarity sort, and an
-    //    array-shipping verify — measured at the sf1→sf10 decade: the
-    //    verify grew shuffle write 158× (88 MB → 13.9 GB) with 50 GB of
-    //    SMJ spill, wall 5.5 → 160 s, while the posting plan shuffles
-    //    16-byte pair rows (Vernica et al., SIGMOD'10). At high τ
-    //    posting still wins 1.5–3× wall on this corpus shape.
-    //  - Heavy df tail (ratio 51.5 in the planted corpus-wide-gram
-    //    probe) → PREFIX+VERIFY at every τ. One gram shared by the
-    //    whole corpus makes the posting join QUADRATIC in the corpus:
-    //    measured at sf1, τ=1/20 — posting-count 218 s with 250 GB of
-    //    aggregate spill vs prefix+verify 10.1 s, zero spill (r11; the
-    //    pre-r11 dispatcher sent τ ≤ 1/4 to posting UNCONDITIONALLY and
-    //    rode straight into that cliff). The probe costs one g-keyed
-    //    aggregation — the cheapest insurance in this file.
-    val ratio = pairRowsPerPostingHint.getOrElse(probePairRowsPerPosting(docs))
-    if (ratio <= PostingMaxPairRowsPerPosting)
-      similarityJoinPostingCount(docs, tauNum, tauDen)
-    else similarityJoinPrefixVerify(docs, tauNum, tauDen)
-  }
-
-  /** Shared shingle-set prep for both [[similarityJoin]] regimes. */
-  private def shingleSets(docs: DataFrame): DataFrame = docs
-    .withColumn("toks", Text.tokens)
-    .filter(size(col("toks")) >= 3)
-    .select(col("doc_id"),
-      graft.functions.exprs.gram3SetSorted(col("toks")).as("hs"))
-    .withColumn("n", size(col("hs")))
-    // materialization barrier (the q31 lesson): without an exchange,
-    // codegen defers the tokenize+shingle projection into the joins and
-    // re-evaluates it per candidate pair
-    .repartition(col("doc_id"))
-
-  /** INGEST half of the standing SHINGLE index — the q125 discipline
-    * applied to the similarity-join family: q31/q73/q81/q103 all start
-    * from the same tokenize + 3-gram-hash pass ([[shingleSets]]), and
-    * each re-derived it from text per run. Persisting (doc_id, hs, n)
-    * once means every similarity query thereafter reads 8-byte hashes,
-    * never document bytes — and the parquet scan IS the materialization
-    * barrier the in-memory path needs an exchange for. Returns
-    * (indexed docs, posting rows) — ingest-volume counters observed on
-    * the write itself (zero extra pass), the first numbers a regression
-    * hunt over an index query wants (r9 task). */
-  def shingleIndexIngest(docs: DataFrame, root: String): (Long, Long) = {
-    val obs = shingleSets(docs).observe("shingle_ingest",
-      count(lit(1)).as("docs"), sum(col("n").cast("long")).as("postings"))
-    // a write executes its own QE, not obs.queryExecution — harvest the
-    // counters through the listener bridge (GraftBridge scaladoc)
-    val (_, m0) = org.apache.spark.sql.GraftBridge.observedFromAction(
-      docs.sparkSession, "shingle_ingest") {
-      obs.write.mode("overwrite").parquet(root)
-    }
-    val m = m0.getOrElse(sys.error(
-      "index ingest wrote successfully but its observed counters never " +
-        "arrived — a metrics-plumbing regression (the write's QE must " +
-        "carry the observe node; see GraftBridge.observedFromAction)"))
-    (m.getLong(0), if (m.isNullAt(1)) 0L else m.getLong(1))
-  }
-
-  /** SCAN half: the standing shingle table (doc_id, hs, n) — flat ingest
-    * layout or [[shingleIndexAppend]] batch subdirectories. */
-  def shingleIndex(spark: SparkSession, root: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(root)
-
-  /** Incremental maintenance of the standing shingle index: one batch's
-    * (doc_id, hs, n) rows land in their own `batch_<id>` subdirectory,
-    * written with OVERWRITE — idempotent per `batchId` exactly like
-    * [[gramIndexAppend]] (single sink here: no df sidecar, so a replayed
-    * micro-batch simply rewrites its directory). `batchId < 0`
-    * auto-assigns max-existing + 1. Appending to an empty root
-    * bootstraps; consumers ([[shingleIndex]] and everything downstream
-    * of it) are unchanged. */
-  def shingleIndexAppend(newDocs: DataFrame, root: String,
-                         batchId: Long = -1L): Unit = {
-    val id = if (batchId >= 0) batchId else claimBatchId(root)
-    val dir = s"$root/batch_$id"
-    if (graft.ops.IndexFs.exists(s"$dir/_SUCCESS")) return // committed: no-op
-    shingleSets(newDocs).write.mode("overwrite").parquet(dir)
-  }
-
-  /** BUCKETED ingest of the standing shingle index — the q125 bucketBy
-    * treatment (measured there: consumer-side gram shuffle 1.26 GB →
-    * 1.2 MB at sf10) applied to the similarity family's dominant
-    * shuffle, the posting self-join on `g`. Two halves, one tokenize
-    * pass: the POSTING table (doc_id, n, g) saved bucketed+sorted on g —
-    * the df-tail probe, the posting-count self-join, and the prefix
-    * regime's df aggregation all start from HashPartitioning(g, buckets)
-    * and plan with NO exchange on g (PlanAuditSpec pins it) — plus the
-    * doc-keyed SETS sidecar (doc_id, hs, n) the prefix-verify step reads
-    * for its hash arrays. Key `table` by [[graft.ops.Scratch.bucketedTable]].
-    * Returns (indexed docs, posting rows) — ingest-volume counters read
-    * from the write itself (zero extra pass, ops.Observed). */
-  def shingleIndexIngestBucketed(docs: DataFrame, table: String,
-                                 buckets: Int = 32): (Long, Long) = {
-    val root = graft.ops.Scale.bucketPath(table)
-    val setsPath = root + "_sets"
-    graft.ops.Scratch.track(setsPath)
-    resetBucketedTable(docs.sparkSession, table)
-    graft.ops.IndexFs.delete(setsPath)
-    val sets = shingleSets(docs).persist()
-    try {
-      val obs = sets.observe("shingle_ingest",
-        count(lit(1)).as("docs"), sum(col("n").cast("long")).as("postings"))
-      val (_, m0) = org.apache.spark.sql.GraftBridge.observedFromAction(
-        docs.sparkSession, "shingle_ingest") {
-        // batch_0 subdirectory: ingest == first append, so the sidecar
-        // layout is uniform under later appends/compaction
-        obs.write.mode("overwrite").parquet(s"$setsPath/batch_0")
-      }
-      writeBucketedBatch(shinglePostings(sets), table, 0L, buckets)
-      val m = m0.getOrElse(sys.error(
-      "index ingest wrote successfully but its observed counters never " +
-        "arrived — a metrics-plumbing regression (the write's QE must " +
-        "carry the observe node; see GraftBridge.observedFromAction)"))
-      (m.getLong(0), if (m.isNullAt(1)) 0L else m.getLong(1))
-    } finally { sets.unpersist(); () }
-  }
-
-  /** The bucketed POSTING half (metastore table, bucket-aware scan; the
-    * `batch` maintenance column dropped — see [[gramIndexBucketed]]). */
-  def shinglePostingsBucketed(spark: SparkSession, table: String): DataFrame =
-    spark.table(table).drop("batch")
-
-  /** Incremental maintenance of the BUCKETED shingle index — the
-    * [[gramIndexAppendBucketed]] twin, EXACTLY-ONCE per batch since r11:
-    * one batch's postings land as their own `batch=<id>` partition of
-    * the bucketed table (dynamic partition overwrite — a replay rewrites
-    * only itself) and its (doc_id, hs, n) rows in their own
-    * `batch_<id>` sidecar subdirectory (per-batch overwrite, the plain
-    * index's mechanism). Both writes are idempotent, the manifest marker
-    * commits last, and the sidecar write goes FIRST — so every crash
-    * point is repaired by replaying the batch. Consumers stay
-    * exchange-free on g (same bucket spec; DedupSpec pins it). */
-  def shingleIndexAppendBucketed(newDocs: DataFrame, table: String,
-                                 buckets: Int = 32,
-                                 batchId: Long = -1L): Unit = {
-    val setsRoot = graft.ops.Scale.bucketPath(table) + "_sets"
-    graft.ops.Scratch.track(setsRoot)
-    val meta = bucketedMeta(table)
-    val id = if (batchId >= 0) batchId
-      else claimId(meta, bucketedBatchIds(table) :+ compactedThrough(meta))
-    if (id <= compactedThrough(meta)) return // absorbed: replay no-op
-    val setsDone = graft.ops.IndexFs.exists(s"$setsRoot/batch_$id/_SUCCESS")
-    if (graft.ops.IndexFs.exists(s"$meta/batches/$id") && setsDone)
-      return // committed: replay no-op
-    val sets = shingleSets(newDocs).persist() // one tokenize, two sinks
-    try {
-      sets.write.mode("overwrite").parquet(s"$setsRoot/batch_$id")
-      writeBucketedBatch(shinglePostings(sets), table, id, buckets)
-    } finally { sets.unpersist(); () }
-  }
-
-  /** COMPACTION of the bucketed shingle index: the posting table
-    * rewritten as one `batch=<max id>` partition
-    * ([[gramIndexCompactBucketed]]'s mechanism) and the sets sidecar's
-    * batch subdirectories merged into one — after N daily batches,
-    * consumers stop paying the N-way in-bucket merge and the N-dir
-    * sidecar listing. Replays of absorbed batches stay no-ops via the
-    * restored `_COMPACTED` mark. Maintenance-window only, like every
-    * compaction here. */
-  def shingleIndexCompactBucketed(spark: SparkSession, table: String,
-                                  buckets: Int = 32): Unit = {
-    val root = graft.ops.Scale.bucketPath(table)
-    val setsRoot = root + "_sets"
-    val ids = bucketedBatchIds(table)
-    if (ids.size <= 1) return
-    val maxId = ids.max
-    // the gramIndexCompact guard, mirrored: a batch whose sets committed
-    // but whose postings never did (crash between the two writes) must
-    // be REPLAYED before compaction — compacting would absorb its sets
-    // while raising the high-water mark over its id, so the replay's
-    // skip would leave its postings missing forever
-    val meta = bucketedMeta(table)
-    val setsIds = graft.ops.IndexFs.childNames(setsRoot, dirsOnly = true)
-      .collect { case n if n.startsWith("batch_") &&
-          graft.ops.IndexFs.exists(s"$setsRoot/$n/_SUCCESS") =>
-        n.stripPrefix("batch_").toLong }
-    val orphans = setsIds.filter(id => id > compactedThrough(meta) &&
-      !graft.ops.IndexFs.exists(s"$meta/batches/$id"))
-    require(orphans.isEmpty,
-      s"shingleIndexCompactBucketed: batch(es) ${orphans.sorted.mkString(",")}" +
-        " have committed sets but no postings manifest (crash between the" +
-        " append's two writes?) — replay them before compacting")
-    compactBucketedTable(spark, table, buckets)
-    val tmp = setsRoot + "_compact_tmp"
-    graft.ops.Scratch.track(tmp)
-    spark.read.option("recursiveFileLookup", "true").parquet(setsRoot)
-      .write.mode("overwrite").parquet(tmp)
-    graft.ops.IndexFs.delete(setsRoot)
-    graft.ops.IndexFs.mkdirs(setsRoot)
-    graft.ops.IndexFs.rename(tmp, s"$setsRoot/batch_$maxId")
-    ()
-  }
-
-  /** The doc-keyed SETS sidecar of the bucketed index (per-batch
-    * subdirectories since r11, hence the recursive lookup). */
-  def shingleSetsSidecar(spark: SparkSession, table: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(graft.ops.Scale.bucketPath(table) + "_sets")
-
-  /** [[similarityJoin]]'s LOW-τ regime, public so the crossover stays
-    * measurable per-round (TauProbe forces each regime at each τ): |A∩B|
-    * is the COUNT of posting rows the pair shares — one posting self-join
-    * + one partial-agg'd groupBy over 16-byte pair rows (Vernica et al.,
-    * SIGMOD'10 shape); J = inter / (n_a + n_b − inter) needs only the
-    * carried set sizes, so no hash array is ever shuffled after the
-    * explode. Work is Σ_g df(g)² pair rows regardless of τ. */
-  def similarityJoinPostingCount(docs: DataFrame, tauNum: Long,
-                                 tauDen: Long): DataFrame =
-    similarityJoinPostingCountFromShingles(shingleSets(docs), tauNum, tauDen)
-
-  /** POSTING form of a shingle frame: one row per (doc, distinct shingle
-    * hash) with the set size carried — the join currency of both
-    * similarity regimes, and the layout the BUCKETED standing index
-    * persists (bucketBy(g) makes every g-keyed join/aggregation over it
-    * exchange-free). */
-  def shinglePostings(sets: DataFrame): DataFrame =
-    // Deliberately NO position column: PPJoin's positional filter was
-    // implemented and MEASURED OUT in round 11 (PairShuffleBench /
-    // ShingleIndexBench A/B): in any global gram order (hash or df), a
-    // shared gram sits at a CORRELATED rank in both docs — both ranks
-    // ≈ the gram's order percentile × n — so the positional bound
-    // min(pos_a, pos_b) + min(n_a−pos_a, n_b−pos_b) ≈ n and prunes only
-    // O(√n) fluctuation beyond what the size-ratio filter already
-    // catches. Measured on the bucketed index: 0.0% of pair rows at
-    // τ=1/20, 0.3% at τ=1/2, while the carried pos column inflated the
-    // plain path's posting exchange ~4%. The textbook filter's wins come
-    // from heterogeneous-length corpora, where the length gap dominates
-    // the bound — and the length filter already prunes those pairs here.
-    sets.select(col("doc_id"), col("n"), explode(col("hs")).as("g"))
-
-  /** [[similarityJoinPostingCount]] over a prepped/persisted shingle
-    * frame ([[shingleSets]] or [[shingleIndex]]). */
-  def similarityJoinPostingCountFromShingles(sets: DataFrame, tauNum: Long,
-                                             tauDen: Long): DataFrame =
-    similarityJoinPostingCountFromPostings(shinglePostings(sets), tauNum, tauDen)
-
-  /** [[similarityJoinPostingCount]] over the POSTING half of the standing
-    * index — on the bucketed table the g-keyed self-join below starts
-    * from HashPartitioning(g, buckets) and plans with no exchange on g. */
-  def similarityJoinPostingCountFromPostings(posting: DataFrame, tauNum: Long,
-                                             tauDen: Long): DataFrame = {
-    posting.as("a").join(posting.as("b"),
-        col("a.g") === col("b.g") &&
-        col("a.doc_id") < col("b.doc_id") &&
-        // size-ratio prune (J ≥ τ ⇒ τ·|larger| ≤ |smaller|), integer math
-        col("a.n") * lit(tauDen) >= col("b.n") * lit(tauNum) &&
-        col("b.n") * lit(tauDen) >= col("a.n") * lit(tauNum))
-      // the aggregation keys carry s = n_a + n_b, NOT both sizes: the
-      // final threshold and the jaccard only ever use the SUM, and this
-      // exchange is the family's measured dominant cost —
-      // PairCompositionProbe (r11) shows ≥99.9% of its rows are chance
-      // pairs sharing 1–2 grams (map-side partial aggregation reduces
-      // volume ~1%, so every key byte ships), and no LOSSLESS row prune
-      // can touch them: each such row is its pair's only evidence.
-      // Dropping the second size column cut the pair shuffle 19–23% at
-      // sf1/sf10 (PairShuffleBench; the raw-repartition variant that
-      // skips the useless map-side aggregate trades bytes for spill at
-      // equal wall and adds a plan barrier — rejected there).
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        (col("a.n") + col("b.n")).as("s"))
-      .agg(count(lit(1)).as("inter"))
-      .filter(col("inter") * lit(tauDen) >=
-        (col("s") - col("inter")) * lit(tauNum))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("s") - col("inter")))
-      .select("doc_a", "doc_b", "jaccard")
-  }
-
-  /** [[similarityJoin]]'s HIGH-τ regime (prefix filter + sorted-merge
-    * verify — the PPJoin shape documented on [[similarityJoin]]), public
-    * so the crossover stays measurable per-round. */
-  def similarityJoinPrefixVerify(docs: DataFrame, tauNum: Long,
-                                 tauDen: Long): DataFrame =
-    similarityJoinPrefixVerifyFromShingles(shingleSets(docs), tauNum, tauDen)
-
-  /** [[similarityJoinPrefixVerify]] over a prepped/persisted shingle
-    * frame. */
-  def similarityJoinPrefixVerifyFromShingles(sets: DataFrame, tauNum: Long,
-                                             tauDen: Long): DataFrame =
-    similarityJoinPrefixVerifyFromPostings(shinglePostings(sets), sets,
-      tauNum, tauDen)
-
-  /** [[similarityJoinPrefixVerify]] over the index's two halves: the
-    * g-keyed stages (df aggregation, prefix candidate join) read
-    * `posting`; the verify step reads the doc-keyed `sets` for its hash
-    * arrays. */
-  def similarityJoinPrefixVerifyFromPostings(posting: DataFrame,
-                                             sets: DataFrame, tauNum: Long,
-                                             tauDen: Long): DataFrame = {
+    * construction. This is the lossless complement to MinHash LSH
+    * ([[lshCandidates]]): same candidate-then-verify shape, but exact
+    * (zero false negatives). The result is order-invariant — ANY global
+    * shingle order is correct, so the hash-based order here and the
+    * oracle's exact-string all-pairs SQL agree exactly (modulo 64-bit
+    * shingle-hash collisions, the q31 precedent). The g-keyed stages (df
+    * aggregation, prefix candidate join) read `posting`; the verify step
+    * reads the doc-keyed `sets` for its hash arrays. */
+  def similarityJoinPrefixVerify(posting: DataFrame, sets: DataFrame,
+                                 tauNum: Long, tauDen: Long): DataFrame = {
     val dfreq = posting.groupBy("g").agg(count(lit(1)).as("df"))
     // (No positional filter on the candidates either — same measured
     // dead end as the count plan, see [[shinglePostings]]: df-order
@@ -759,49 +581,48 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard")
   }
 
+  /** [[similarityJoin]] over a document frame: the adapter's postings
+    * and the sets from one [[shingleSets]] frame (one exchange, reused). */
+  private def similarityJoinOf(docs: DataFrame, tauNum: Long,
+                               tauDen: Long): DataFrame = {
+    val sets = shingleSets(docs)
+    similarityJoin(shinglePostings(sets), sets, tauNum, tauDen)
+  }
+
   def qSimJoinPrefix(spark: SparkSession, d: String): DataFrame =
-    similarityJoin(Tables.documents(spark, d), tauNum = 1, tauDen = 2)
+    similarityJoinOf(Tables.documents(spark, d), tauNum = 1, tauDen = 2)
       .orderBy("doc_a", "doc_b")
 
   /** RARE-GRAM similarity join — the declared-contract scale variant of
     * the exact low-τ join, born from round 11's measured dead end: the
     * exact posting-count plan's pair shuffle is Σ_g df(g)² rows, which
-    * no lossless prune can touch (PairCompositionProbe: ≥99.9% of rows
-    * are chance pairs whose single co-occurrence IS their evidence), and
-    * ONE corpus-wide gram makes it quadratic in the corpus. This
-    * operator changes the CONTRACT instead of chasing the impossible
-    * prune: Jaccard over the df ≤ `dfCap` gram SUB-UNIVERSE — each
-    * doc's shingle set restricted to grams rarer than the cap, set
-    * sizes recomputed over that restriction, threshold and score exact
-    * within it. The semantics are not an approximation of full Jaccard;
-    * they are a different, well-defined similarity that near-dup
-    * practice often PREFERS: corpus-frequent shingles are boilerplate
-    * (headers, licenses, navigation), and boilerplate co-occurrence is
-    * the classic false-positive source (the same reason
-    * [[contaminationPairs]] keys on RARE grams only, dfCap=20, and the
-    * q68 boilerplate detector exists). Exactly oracle-checkable — DuckDB
-    * recomputes the sub-universe, sizes, counts, and scores (q132).
+    * no lossless prune can touch (≥99.9% of rows are chance pairs whose
+    * single co-occurrence IS their evidence), and ONE corpus-wide gram
+    * makes it quadratic in the corpus. This operator changes the
+    * CONTRACT instead of chasing the impossible prune: Jaccard over the
+    * df ≤ `dfCap` gram SUB-UNIVERSE — each doc's shingle set restricted
+    * to grams rarer than the cap, set sizes recomputed over that
+    * restriction, threshold and score exact within it. The semantics are
+    * not an approximation of full Jaccard; they are a different,
+    * well-defined similarity that near-dup practice often PREFERS:
+    * corpus-frequent shingles are boilerplate (headers, licenses,
+    * navigation), and boilerplate co-occurrence is the classic
+    * false-positive source (the same reason [[contaminationPairs]] keys
+    * on RARE grams only, dfCap=20, and the q68 boilerplate detector
+    * exists). Exactly oracle-checkable — DuckDB recomputes the
+    * sub-universe, sizes, counts, and scores (q132).
     *
     * The scale property bought: pair rows = Σ_{df≤cap} df(df−1)/2 ≤
     * (cap−1)/2 · |postings| — LINEAR in the corpus with a cap-sized
     * constant, versus the uncapped plan's df² blowup on heavy-tailed
-    * corpora (measured: TauProbe's planted corpus-wide gram). Costs
-    * beyond the capped pair join are all linear and keyed: one df
-    * aggregation (g), one semi join (g — exchange-free off the bucketed
-    * index), one size recount + attach (doc_id). `dfCap ≥ max df`
-    * degenerates to exactly [[similarityJoinPostingCount]]'s result
-    * (DedupSpec pins it). */
-  def similarityJoinRareGrams(docs: DataFrame, tauNum: Long, tauDen: Long,
-                              dfCap: Long): DataFrame =
-    similarityJoinRareGramsFromPostings(
-      shinglePostings(shingleSets(docs)), tauNum, tauDen, dfCap)
-
-  /** [[similarityJoinRareGrams]] over the POSTING half of a standing
-    * index (plain or bucketed — on the bucketed table the df aggregation
-    * and semi join plan without an exchange on g). */
-  def similarityJoinRareGramsFromPostings(posting: DataFrame, tauNum: Long,
-                                          tauDen: Long,
-                                          dfCap: Long): DataFrame = {
+    * corpora (measured on the planted corpus-wide gram, BENCHMARKS.md
+    * "Rare-gram join + the low-τ dispatch cliff"). Costs beyond the capped pair join are all linear
+    * and keyed: one df aggregation (g), one semi join (g — exchange-free
+    * off the bucketed index), one size recount + attach (doc_id).
+    * `dfCap ≥ max df` degenerates to exactly
+    * [[similarityJoinPostingCount]]'s result (DedupSpec pins it). */
+  def similarityJoinRareGrams(posting: DataFrame, tauNum: Long,
+                              tauDen: Long, dfCap: Long): DataFrame = {
     require(tauNum > 0 && tauDen >= tauNum,
       s"similarityJoinRareGrams: tau must be in (0, 1], got $tauNum/$tauDen")
     require(dfCap >= 1, s"similarityJoinRareGrams: dfCap must be ≥ 1")
@@ -867,30 +688,16 @@ object Dedup {
     cap
   }
 
-  /** The (doc_id, n, g) posting table of a document frame — the
-    * from-scratch twin of a standing index's posting half, public so cap
-    * derivation and specs can probe the same statistics the dispatcher
-    * sees. */
-  def shinglePostingsOf(docs: DataFrame): DataFrame =
-    shinglePostings(shingleSets(docs))
-
   /** [[similarityJoinRareGrams]] with the cap DERIVED from the corpus
     * ([[deriveRareGramCap]]). The cap defines the similarity's
     * sub-universe, so it stays part of the output contract: it rides the
     * plan as the `rare_cap` in-plan observation (the bench-artifact
     * discipline), and callers who need it programmatically call
     * [[deriveRareGramCap]] themselves and use the explicit-cap form. */
-  def similarityJoinRareGrams(docs: DataFrame, tauNum: Long,
+  def similarityJoinRareGrams(posting: DataFrame, tauNum: Long,
                               tauDen: Long): DataFrame = {
-    val posting = shinglePostings(shingleSets(docs))
-    similarityJoinRareGramsFromPostings(posting, tauNum, tauDen)
-  }
-
-  /** The derived-cap form over a standing index's posting half. */
-  def similarityJoinRareGramsFromPostings(posting: DataFrame, tauNum: Long,
-                                          tauDen: Long): DataFrame = {
     val cap = deriveRareGramCap(posting)
-    similarityJoinRareGramsFromPostings(posting, tauNum, tauDen, cap)
+    similarityJoinRareGrams(posting, tauNum, tauDen, cap)
       .observe("rare_cap", max(lit(cap)).as("derived_df_cap"))
   }
 
@@ -898,7 +705,7 @@ object Dedup {
     * τ=1/20 with the contamination family's cap — full pair set, both
     * scores exact within the declared sub-universe. */
   def qSimJoinRareCap(spark: SparkSession, d: String): DataFrame =
-    similarityJoinRareGrams(Tables.documents(spark, d),
+    similarityJoinRareGrams(shinglePostingsOf(Tables.documents(spark, d)),
         tauNum = 1, tauDen = 20, dfCap = 20)
       .orderBy("doc_a", "doc_b")
 
@@ -1103,7 +910,7 @@ object Dedup {
     * (not the math) stays honest. Raw pairs via [[minhashVerifyPairs]]. */
   def qMinhashVerify(spark: SparkSession, d: String): DataFrame = {
     val tauNum = 1L; val tauDen = 2L
-    val exact = similarityJoin(Tables.documents(spark, d), tauNum, tauDen)
+    val exact = similarityJoinOf(Tables.documents(spark, d), tauNum, tauDen)
       .select("doc_a", "doc_b")
     val found = minhashVerifyPairs(spark, d)
       .filter(col("exact_jaccard") * lit(tauDen) >= lit(tauNum))
@@ -1160,195 +967,41 @@ object Dedup {
       .select(col("doc_id"), col("source"),
         explode(graft.functions.exprs.gramNSetSorted(col("toks"), n)).as("g"))
 
-  /** INGEST half of the standing gram index (the q122 ingest/scan
-    * discipline applied to the gram-join family): tokenize + shingle the
-    * corpus ONCE, persist the postings table. Every downstream gram
-    * query then scans postings — three 8-gram consumers in the registry
-    * each re-derived this from text per run, which at 100 TB means
-    * re-tokenizing the corpus three times per curation pass instead of
-    * zero. At cluster scale write with `bucketBy(g)` so the df
-    * aggregation and all gram joins are exchange-free; plain parquet
-    * here keeps the demo portable. Returns (posting rows, ~distinct
-    * grams) — ingest-volume counters observed on the write itself (zero
-    * extra pass; distinct grams via the HLL sketch, since CollectMetrics
-    * cannot host a DISTINCT aggregate). */
-  def gramIndexIngest(docs: DataFrame, root: String, n: Int = 8): (Long, Long) = {
-    val obs = gramPostings(docs, n).observe("gram_ingest",
-      count(lit(1)).as("postings"),
-      approx_count_distinct(col("g")).as("grams"))
-    // a write executes its own QE, not obs.queryExecution — harvest the
-    // counters through the listener bridge (GraftBridge scaladoc)
-    val (_, m0) = org.apache.spark.sql.GraftBridge.observedFromAction(
-      docs.sparkSession, "gram_ingest") {
-      obs.write.mode("overwrite").parquet(root)
-    }
-    val m = m0.getOrElse(sys.error(
-      "index ingest wrote successfully but its observed counters never " +
-        "arrived — a metrics-plumbing regression (the write's QE must " +
-        "carry the observe node; see GraftBridge.observedFromAction)"))
-    (m.getLong(0), m.getLong(1))
-  }
+  /** The standing GRAM index at `root` (the q122 ingest/scan discipline
+    * applied to the gram-join family): tokenize + shingle the corpus
+    * ONCE, persist the postings. Every downstream gram query then scans
+    * postings — three 8-gram consumers in the registry each re-derived
+    * this from text per run, which at 100 TB means re-tokenizing the
+    * corpus three times per curation pass instead of zero. Two sinks from
+    * one tokenize pass: "postings" (doc_id, source, g) in `root`, and
+    * "df" — each batch's mergeable df partial ([[gramDfState]]) in
+    * `root_df`, merged by SUM on scan and on compaction. A daily curation
+    * pass thus pays O(batch), never O(corpus): neither the postings
+    * re-tokenize nor the df re-aggregation touches a prior batch.
+    * Ingest counters: (posting rows, ~distinct grams — the HLL sketch,
+    * since CollectMetrics cannot host a DISTINCT aggregate). */
+  def gramIndex(root: String, n: Int = 8): StandingIndex =
+    StandingIndex(Seq(Sink("postings", root, Plain),
+        Sink("df", root + "_df", Plain, gramDfState,
+          Some(_.groupBy("g").agg(sum(col("df_part")).as("df_part"))))),
+      gramPostings(_, n),
+      Seq(count(lit(1)).as("postings"), approx_count_distinct(col("g")).as("grams")))
 
-  /** SCAN half: the standing postings table — the flat [[gramIndexIngest]]
-    * layout, the per-batch [[gramIndexAppend]] subdirectories, or a mix
-    * (recursive lookup reads both; batch dirs are plain subdirectories,
-    * not hive partitions, so the schema never grows a phantom column). */
-  def gramIndex(spark: SparkSession, root: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(root)
-
-  /** BUCKETED ingest — the exchange-free cluster form the plain-parquet
-    * scaladoc promised: postings saved as a bucketed+sorted table on `g`,
-    * so the df aggregation (`groupBy(g)`) and every gram join whose both
-    * sides read this table (eval⋈train contamination, postings⋈df) start
-    * from HashPartitioning(g, buckets) and plan with NO shuffle exchange
-    * on g (PlanAuditSpec pins it; BENCHMARKS.md records the shuffle-bytes
+  /** The BUCKETED gram index (metastore `table`) — the exchange-free
+    * cluster form: postings saved bucketed+sorted on `g`, so the df
+    * aggregation (`groupBy(g)`) and every gram join whose both sides read
+    * this table (eval⋈train contamination, postings⋈df) start from
+    * HashPartitioning(g, buckets) and plan with NO shuffle exchange on g
+    * (PlanAuditSpec pins it; BENCHMARKS.md records the shuffle-bytes
     * delta vs the plain index). The trade is write-side: bucketBy
     * shuffles the postings once at ingest — paid once, saved by every
-    * consumer of the index thereafter. Read back with [[gramIndexBucketed]]. */
-  def gramIndexIngestBucketed(docs: DataFrame, table: String, n: Int = 8,
-                              buckets: Int = 32): Unit = {
-    resetBucketedTable(docs.sparkSession, table)
-    writeBucketedBatch(gramPostings(docs, n), table, 0L, buckets)
-  }
-
-  /** Fresh-build preamble: drop the catalog entry and wipe the table dir
-    * (data, claims, manifest, high-water mark) so ingest means "rebuild
-    * from this corpus", never "append to whatever was there". */
-  private def resetBucketedTable(spark: SparkSession, table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    graft.ops.IndexFs.delete(graft.ops.Scale.bucketPath(table))
-    graft.ops.IndexFs.delete(bucketedMeta(table))
-  }
-
-  /** The bucketed standing index (metastore table, bucket-aware scan).
-    * The `batch` partition column is maintenance metadata (the
-    * exactly-once append/compaction bookkeeping), not index content —
-    * dropped here so consumers see the same schema as the plain index. */
-  def gramIndexBucketed(spark: SparkSession, table: String): DataFrame =
-    spark.table(table).drop("batch")
-
-  /** Incremental maintenance of the BUCKETED gram index — EXACTLY-ONCE
-    * per batch since r11 (the r10 deferral closed): each batch lands as
-    * its own `batch=<id>` PARTITION of the (partitioned + bucketed)
-    * table, written through DYNAMIC partition overwrite — a replayed
-    * batch rewrites only its own partition instead of double-appending,
-    * and a crashed write leaves no committed files (the v1 committer
-    * moves task output at job commit), so replay repairs every crash
-    * point. A `_batches/<id>` manifest marker (presence-only, written
-    * AFTER the data commits — the `_SUCCESS` discipline) short-circuits
-    * committed replays without a Spark job, and `batchId < 0`
-    * auto-claims an unused id durably (`_claims`, the
-    * [[claimBatchId]] mechanism). Partitioning does NOT cost the
-    * bucketing win: each bucket id spans files across partitions and
-    * Spark's bucketed scan still reports HashPartitioning(g, buckets) —
-    * consumers keep their exchange-free plans after any number of
-    * appends (DedupSpec + PlanAuditSpec pin it). Appending to a missing
-    * table bootstraps it, so bucketed ingest == first bucketed append.
-    * No df sidecar exists in this form — ON the bucketed table the df
-    * aggregation is itself exchange-free, so maintaining partials would
-    * save nothing. */
-  def gramIndexAppendBucketed(newDocs: DataFrame, table: String, n: Int = 8,
-                              buckets: Int = 32, batchId: Long = -1L): Unit = {
-    val meta = bucketedMeta(table)
-    val id = if (batchId >= 0) batchId
-      else claimId(meta, bucketedBatchIds(table) :+ compactedThrough(meta))
-    if (id <= compactedThrough(meta)) return // absorbed: replay no-op
-    if (graft.ops.IndexFs.exists(s"$meta/batches/$id"))
-      return // committed: replay no-op
-    writeBucketedBatch(gramPostings(newDocs, n), table, id, buckets)
-  }
-
-  /** The bucketed table's maintenance-metadata SIBLING dir (claims,
-    * per-batch commit manifest, compaction high-water mark). A sibling,
-    * not a subdirectory: the table path must be empty for the bootstrap
-    * CTAS, and the metadata must SURVIVE compaction's table rewrite —
-    * a manifest that died with the table would forget which batches
-    * committed, exactly when replays get interesting. */
-  private def bucketedMeta(table: String): String = {
-    val m = graft.ops.Scale.bucketPath(table) + "_meta"
-    graft.ops.Scratch.track(m)
-    m
-  }
-
-  /** One batch into one `batch=<id>` partition of a bucketed table:
-    * bootstrap via saveAsTable, steady state via positional insertInto
-    * under dynamic partition overwrite (only the batch's own partition
-    * is replaced — the replay idempotency), manifest marker last. */
-  private def writeBucketedBatch(rows: DataFrame, table: String,
-                                 id: Long, buckets: Int): Unit = {
-    val spark = rows.sparkSession
-    val root = graft.ops.Scale.bucketPath(table)
-    val withBatch = rows.withColumn("batch", lit(id))
-    if (!spark.catalog.tableExists(table))
-      withBatch.write.partitionBy("batch").bucketBy(buckets, "g").sortBy("g")
-        .option("path", root).saveAsTable(table)
-    else {
-      // dynamic partition overwrite scoped to a session CLONE (the
-      // bloomSketchBytes mechanism): the catalog-table insert path reads
-      // the SESSION conf, not the writer option (measured — a static
-      // overwrite wipes every other batch), and mutating the shared
-      // session would leak overwrite semantics to concurrent writers.
-      // Catalog entries live in shared state, so the clone sees `table`.
-      val scoped = org.apache.spark.sql.GraftBridge
-        .cloneSession(spark)
-      scoped.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      org.apache.spark.sql.GraftBridge.withSession(
-          withBatch.select(spark.table(table).columns.map(col(_)): _*),
-          scoped)
-        .write.mode("overwrite").insertInto(table)
-      // the insert refreshed the CLONE's relation cache; the caller's
-      // session still holds the pre-overwrite file listing — refresh it
-      spark.catalog.refreshTable(table)
-    }
-    graft.ops.IndexFs.mkdirs(s"${bucketedMeta(table)}/batches/$id")
-    ()
-  }
-
-  /** Partition ids (`batch=<id>` dirs) of a bucketed index table. */
-  private def bucketedBatchIds(table: String): Seq[Long] =
-    graft.ops.IndexFs
-      .childNames(graft.ops.Scale.bucketPath(table), dirsOnly = true)
-      .collect { case n if n.startsWith("batch=") =>
-        n.stripPrefix("batch=").toLong }
-
-  /** COMPACTION of the bucketed gram index — [[gramIndexCompact]] one
-    * level up (r10 verdict item): every append adds one file set per
-    * bucket, and though consumers stay exchange-free, after N batches
-    * each bucket task pays an N-way merge forever. Compaction rewrites
-    * the table as ONE `batch=<max id>` partition with the same bucket
-    * spec (consumer plans unchanged; DedupSpec pins compact + more
-    * appends == from-scratch) and restores the `_COMPACTED` high-water
-    * mark the rewrite wiped, so replays of absorbed batches stay no-ops
-    * and later auto ids stay ahead. Same honesty as the plain form: not
-    * atomic — a crash mid-compact can lose the table, which is DERIVED
-    * state rebuildable from the corpus; run it in the maintenance
-    * window, never the serving path, and never concurrently with
-    * appends. */
-  def gramIndexCompactBucketed(spark: SparkSession, table: String,
-                               buckets: Int = 32): Unit =
-    compactBucketedTable(spark, table, buckets)
-
-  private def compactBucketedTable(spark: SparkSession, table: String,
-                                   buckets: Int): Unit = {
-    val root = graft.ops.Scale.bucketPath(table)
-    val ids = bucketedBatchIds(table)
-    if (ids.size <= 1) return // nothing to merge
-    val maxId = ids.max
-    val tmp = root + "_compact_tmp"
-    graft.ops.Scratch.track(tmp)
-    spark.table(table).drop("batch").write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).withColumn("batch", lit(maxId))
-      .write.mode("overwrite")
-      .partitionBy("batch").bucketBy(buckets, "g").sortBy("g")
-      .option("path", root).saveAsTable(table)
-    // the manifest and claims live in the meta SIBLING and survived the
-    // table rewrite, so committed replays stay no-ops on their own; the
-    // high-water mark additionally floors auto ids and covers batches
-    // whose data was absorbed without a manifest
-    graft.ops.IndexFs.writeString(
-      s"${bucketedMeta(table)}/_COMPACTED", maxId.toString)
-    graft.ops.IndexFs.delete(tmp)
-  }
+    * consumer thereafter. No df sidecar: ON the bucketed table the df
+    * aggregation is itself exchange-free, so partials would save
+    * nothing. */
+  def gramIndexBucketed(table: String, n: Int = 8,
+                        buckets: Int = 32): StandingIndex =
+    StandingIndex(Seq(Sink("postings", table, Bucketed("g", buckets))),
+      gramPostings(_, n))
 
   /** Mergeable df state of ONE postings batch — the gram-index twin of
     * [[graft.ops.Incremental.aggState]]: df counts are a sum, so partial
@@ -1357,158 +1010,6 @@ object Dedup {
     * random split). */
   def gramDfState(postings: DataFrame): DataFrame =
     postings.groupBy("g").agg(count(lit(1)).as("df_part"))
-
-  /** Incremental index maintenance: append one batch's postings to the
-    * standing index PARTITION-WISE (the batch's postings never shuffle)
-    * and its df partial state to the `<root>_df` sidecar (aggregating
-    * ONLY the delta — the ops.Incremental discipline). A daily curation
-    * pass thus pays O(batch), never O(corpus): the full postings
-    * re-tokenize and the full df re-aggregation both disappear. Appending
-    * to empty roots bootstraps the index, so ingest == first append.
-    * Consumers are unchanged: [[gramIndex]] reads the union of appended
-    * batches; [[gramIndexDf]] merges the sidecar partials by sum.
-    *
-    * IDEMPOTENT per `batchId` (the r9 ADVICE fix): each batch lands in
-    * its own `batch_<id>` subdirectory of both sinks, written with
-    * OVERWRITE — a replayed micro-batch (streamingGramIngest recovering
-    * from its checkpoint) rewrites the same two directories instead of
-    * double-appending, and a crash BETWEEN the two writes leaves a batch
-    * whose replay repairs it, so exactly-once holds at every crash
-    * point. A batch already committed to both sinks (`_SUCCESS` markers
-    * present, or a df partial absorbed by [[gramIndexCompact]] — the
-    * sidecar's `_COMPACTED` high-water mark) is skipped outright.
-    * `batchId < 0` (batch callers without a replay log) auto-assigns an
-    * unused id by ATOMIC directory creation — two concurrent auto-id
-    * appenders race to mkdir the same candidate, exactly one wins, the
-    * loser takes the next id (local/HDFS semantics; object stores lack
-    * atomic mkdir — there, name your batches). Overwrite-on-replay is
-    * reserved for callers that DO name their batches (foreachBatch's
-    * batchId). */
-  def gramIndexAppend(newDocs: DataFrame, root: String, n: Int = 8,
-                      batchId: Long = -1L): Unit = {
-    val id = if (batchId >= 0) batchId else claimBatchId(root)
-    val pDir = s"$root/batch_$id"
-    val dfDir = s"${root}_df/batch_$id"
-    val dfDone = graft.ops.IndexFs.exists(s"$dfDir/_SUCCESS") ||
-      id <= compactedThrough(root + "_df") // partial absorbed by compaction
-    if (graft.ops.IndexFs.exists(s"$pDir/_SUCCESS") && dfDone)
-      return // committed: replay no-op
-    val p = gramPostings(newDocs, n).persist() // one tokenize pass, two sinks
-    try {
-      p.write.mode("overwrite").parquet(pDir)
-      if (!dfDone) // never re-emit a partial compaction already merged
-        gramDfState(p).write.mode("overwrite").parquet(dfDir)
-    } finally { p.unpersist(); () }
-  }
-
-  /** Ids of the committed `batch_<id>` subdirectories under `root`. */
-  private def batchIds(root: String): Seq[Long] =
-    graft.ops.IndexFs.childNames(root, dirsOnly = true)
-      .collect { case n if n.startsWith("batch_") =>
-        n.stripPrefix("batch_").toLong }
-
-  /** Claim the next unused auto batch id by ATOMIC create-if-absent of
-    * a DURABLE marker file under `_claims/` — a namespace no data write
-    * ever touches. A plain max+1 read is a TOCTOU race (two concurrent
-    * appenders pick the same id — the r10 review find), and the first
-    * fix claimed the `batch_<id>` DATA directory itself, which the
-    * subsequent mode("overwrite") write DELETES before recreating: in
-    * that window a concurrent auto-id appender could re-claim the freed
-    * id and the two batches would silently overwrite each other — the
-    * exact silent-loss class the claim exists to prevent (the r11 review
-    * find). Claim markers are empty FILES created via
-    * [[graft.ops.IndexFs.createExclusive]] (atomic on local/HDFS — the
-    * r12 FileSystem port; HDFS `mkdirs` returns true on existing dirs,
-    * so the old local `File.mkdir` claim could not port as a dir.
-    * Object stores lack ANY atomic create-if-absent — there, name your
-    * batches) and NEVER removed, so a claim outlives any crash or
-    * rewrite of its batch: the id is burned, never reusable. The
-    * underscore-prefixed parent keeps Spark's file index from ever
-    * listing the markers. Candidates start past existing data batches
-    * AND existing claims (named-batch replays bypass claims, so a named
-    * id below the claim watermark stays replayable). */
-  private[graft] def claimBatchId(root: String): Long =
-    claimId(root, batchIds(root))
-
-  /** The shared claim mechanism: atomic mkdir under `root/_claims`,
-    * candidates starting past both `existing` ids and prior claims. */
-  private def claimId(root: String, existing: Seq[Long]): Long = {
-    val claims = s"$root/_claims"
-    graft.ops.IndexFs.mkdirs(claims)
-    // tolerate non-numeric detritus (NFS tombstones, stray sidecars) —
-    // a foreign file must not brick every future auto-id append
-    val claimed = graft.ops.IndexFs.childNames(claims)
-      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-    var cand = (existing ++ claimed).foldLeft(-1L)(math.max) + 1L
-    while (!graft.ops.IndexFs.createExclusive(s"$claims/$cand")) cand += 1
-    cand
-  }
-
-  /** The sidecar's compaction high-water mark: every df partial with
-    * batch id ≤ this has been merged into the compacted partial, so a
-    * REPLAY of such a batch must not re-emit its df state (it would
-    * double-count — the r10 review find). -1 when never compacted. */
-  private def compactedThrough(side: String): Long =
-    graft.ops.IndexFs.readStringOpt(s"$side/_COMPACTED")
-      .map(_.trim.toLong).getOrElse(-1L)
-
-  /** The maintained df aggregate: merge the appended partials by sum —
-    * equals `gramPostings(allDocs).groupBy(g).count()` exactly, without
-    * touching the postings (or the text) of any prior batch. */
-  def gramIndexDf(spark: SparkSession, root: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(root + "_df")
-      .groupBy("g").agg(sum(col("df_part")).as("df"))
-
-  /** Sidecar COMPACTION: without it, [[gramIndexAppend]] accretes one df
-    * partial per (batch, gram) forever, and [[gramIndexDf]] re-merges all
-    * of them on every read — O(batches × grams) scan work for an
-    * O(grams) result. Compaction rewrites the sidecar as ONE merged
-    * partial (the same monoid sum, one level up — the ops.Incremental
-    * discipline applied to its own state), so the property
-    * `compact(any prefix of appends) then more appends == from-scratch`
-    * holds trivially: a merged prefix is itself a valid partial
-    * (associativity). The merged partial keeps the HIGHEST existing
-    * batch id, so auto-assigned ids of later appends (derived from the
-    * postings root, which holds the same max) stay ahead, and a
-    * `_COMPACTED` high-water marker records which partials were
-    * absorbed — a REPLAYED pre-compaction batch then skips its df write
-    * instead of double-counting (the r10 review find; DedupSpec pins
-    * replay-after-compact == from-scratch). Not atomic — a crash
-    * mid-compact can lose the sidecar — but the sidecar is DERIVED
-    * state, rebuildable from the postings root
-    * (`gramDfState(gramIndex(root))`); run compaction in the maintenance
-    * window, not the serving path. */
-  def gramIndexCompact(spark: SparkSession, root: String): Unit = {
-    val side = root + "_df"
-    // Refuse to compact around a half-committed append: a postings batch
-    // whose df partial is missing (crash between gramIndexAppend's two
-    // writes) must be REPLAYED first — compacting past it can raise the
-    // `_COMPACTED` high-water mark over its id, and the replay's
-    // `id <= compactedThrough` skip would then drop that batch's df
-    // partial forever (gramIndexDf undercounts — the r11 review find).
-    // Inductively, ids at or below the current mark were all absorbed
-    // complete, so only ids above it can be orphans.
-    val mark = compactedThrough(side)
-    val orphans = batchIds(root).filter(id => id > mark &&
-      graft.ops.IndexFs.exists(s"$root/batch_$id/_SUCCESS") &&
-      !graft.ops.IndexFs.exists(s"$side/batch_$id/_SUCCESS"))
-    require(orphans.isEmpty,
-      s"gramIndexCompact: postings batch(es) ${orphans.sorted.mkString(",")}" +
-        " lack their df sidecar (crash between the append's two writes?)" +
-        " — replay them (gramIndexAppend with the same batchId) before" +
-        " compacting")
-    val ids = batchIds(side)
-    if (ids.size <= 1) return // nothing to merge
-    val merged = gramIndexDf(spark, root)
-      .select(col("g"), col("df").as("df_part"))
-    val tmp = side + "_compact_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    graft.ops.IndexFs.delete(side)
-    graft.ops.IndexFs.mkdirs(side)
-    graft.ops.IndexFs.rename(tmp, s"$side/batch_${ids.max}")
-    graft.ops.IndexFs.writeString(s"$side/_COMPACTED", ids.max.toString)
-    ()
-  }
 
   /** [[contaminationPairs]] over an existing postings frame (from
     * [[gramPostings]] or the persisted [[gramIndex]]). */
@@ -1669,9 +1170,8 @@ object Dedup {
   def ensureGramIndex(spark: SparkSession,
                       d: String): (String, (Long, Long)) = {
     val root = graft.ops.Scratch.root(spark, d, "gram_index")
-    val fp = graft.ops.Standing.fingerprint(s"$d/documents.parquet")
-    (root, graft.ops.Standing.ensureCounters(root, fp)(
-      gramIndexIngest(Tables.documents(spark, d), root)))
+    graft.ops.Scratch.track(root + "_df")
+    (root, ensureOn(gramIndex(root), spark, d))
   }
 
   /** ENSURE the standing shingle index (q127) — the [[ensureGramIndex]]
@@ -1680,9 +1180,7 @@ object Dedup {
   def ensureShingleIndex(spark: SparkSession,
                          d: String): (String, (Long, Long)) = {
     val root = graft.ops.Scratch.root(spark, d, "shingle_index")
-    val fp = graft.ops.Standing.fingerprint(s"$d/documents.parquet")
-    (root, graft.ops.Standing.ensureCounters(root, fp)(
-      shingleIndexIngest(Tables.documents(spark, d), root)))
+    (root, ensureOn(shingleIndex(root), spark, d))
   }
 
   /** ENSURE the BUCKETED standing shingle index (q128). Returns
@@ -1690,14 +1188,16 @@ object Dedup {
   def ensureShingleBucketed(spark: SparkSession,
                             d: String): (String, (Long, Long)) = {
     val table = graft.ops.Scratch.bucketedTable(spark, d, "shingle_ix")
-    val fp = graft.ops.Standing.fingerprint(s"$d/documents.parquet")
-    val tablePath = graft.ops.Scale.bucketPath(table)
-    (table, graft.ops.Standing.ensureCounters(tablePath, fp)(
-      shingleIndexIngestBucketed(Tables.documents(spark, d), table)))
+    (table, ensureOn(shingleIndexBucketed(table), spark, d))
   }
 
+  private def ensureOn(ix: StandingIndex, spark: SparkSession,
+                       d: String): (Long, Long) =
+    ix.ensure(graft.ops.Standing.fingerprint(s"$d/documents.parquet"))(
+      Tables.documents(spark, d))
+
   /** q125: the standing gram index made real — postings written once
-    * ([[gramIndexIngest]]), then BOTH heavy gram consumers answered from
+    * ([[gramIndex]]), then BOTH heavy gram consumers answered from
     * the index without touching document text: per-source duplication
     * coverage (q87's semantics) and the count of contaminated training
     * docs (q62/q119's rule). The oracle recomputes everything from the
@@ -1708,7 +1208,7 @@ object Dedup {
     * amortizes over every gram query it runs. */
   def qGramIndex(spark: SparkSession, d: String): DataFrame = {
     val (root, (nPostings, nGrams)) = ensureGramIndex(spark, d)
-    val postings = gramIndex(spark, root)
+    val postings = gramIndex(root).scan(spark)
     val cov = dupCoverageFrom(postings)
     val docSource = postings.select(col("doc_id"), col("source")).distinct()
     val contaminated = contaminationPairsFrom(postings)
@@ -1726,7 +1226,7 @@ object Dedup {
   }
 
   /** q127: the standing SHINGLE index made real — (doc_id, hs, n) written
-    * once ([[shingleIndexIngest]]), then BOTH similarity-join regimes
+    * once ([[shingleIndex]]), then BOTH similarity-join regimes
     * answered from the index without re-tokenizing text: the τ=1/20
     * posting-count top-20 (q31's semantics) and the τ=1/2 dispatched join
     * (q103's semantics, probe run off the index). The oracle recomputes
@@ -1736,19 +1236,9 @@ object Dedup {
     * cycle feeding every similarity query, with joins reading 8-byte
     * hashes instead of document bytes. */
   def qShingleIndex(spark: SparkSession, d: String): DataFrame = {
-    val (root, (nDocs, nPostings)) = ensureShingleIndex(spark, d)
-    val sets = shingleIndex(spark, root)
-    val low = similarityJoinFromShingles(sets, 1, 20)
-      .orderBy(col("jaccard").desc, col("doc_a"), col("doc_b")).limit(20)
-      .select(lit("tau_1_20_top20").as("consumer"),
-        col("doc_a"), col("doc_b"), col("jaccard"))
-    val high = similarityJoinFromShingles(sets, 1, 2)
-      .select(lit("tau_1_2").as("consumer"),
-        col("doc_a"), col("doc_b"), col("jaccard"))
-    low.unionByName(high).orderBy("consumer", "doc_a", "doc_b")
-      // ingest volume as plan literals (the q125 counter discipline)
-      .observe("ix", max(lit(nDocs)).as("index_docs"),
-        max(lit(nPostings)).as("index_postings"))
+    val (root, counters) = ensureShingleIndex(spark, d)
+    val sets = shingleIndex(root).scan(spark)
+    shingleConsumers(shinglePostings(sets), sets, counters)
   }
 
   /** q128: q127's consumers answered from the BUCKETED standing shingle
@@ -1757,22 +1247,29 @@ object Dedup {
     * self-join) starts from the bucketed table's HashPartitioning and
     * plans with no exchange on g. The bucketBy shuffle is paid once at
     * ingest; q125's twin measured that trade at 1000× consumer-shuffle
-    * reduction at sf10 (BENCHMARKS.md "Bucketed index measured"), and
-    * tools.ShingleIndexBench records this family's own A/B. */
+    * reduction at sf10, and BENCHMARKS.md "Bucketed shingle index (q128)"
+    * records this family's own A/B. */
   def qShingleBucketed(spark: SparkSession, d: String): DataFrame = {
-    val (table, (nDocs, nPostings)) = ensureShingleBucketed(spark, d)
-    val posting = shinglePostingsBucketed(spark, table)
-    val sets = shingleSetsSidecar(spark, table)
-    val low = similarityJoinFromPostings(posting, sets, 1, 20)
+    val (table, counters) = ensureShingleBucketed(spark, d)
+    val ix = shingleIndexBucketed(table)
+    shingleConsumers(ix.scan(spark, "postings"), ix.scan(spark, "sets"),
+      counters)
+  }
+
+  /** q127/q128's two consumers over a shingle index's halves, with the
+    * ingest volume as plan literals (the q125 counter discipline). */
+  private def shingleConsumers(posting: DataFrame, sets: DataFrame,
+                               counters: (Long, Long)): DataFrame = {
+    val low = similarityJoin(posting, sets, 1, 20)
       .orderBy(col("jaccard").desc, col("doc_a"), col("doc_b")).limit(20)
       .select(lit("tau_1_20_top20").as("consumer"),
         col("doc_a"), col("doc_b"), col("jaccard"))
-    val high = similarityJoinFromPostings(posting, sets, 1, 2)
+    val high = similarityJoin(posting, sets, 1, 2)
       .select(lit("tau_1_2").as("consumer"),
         col("doc_a"), col("doc_b"), col("jaccard"))
     low.unionByName(high).orderBy("consumer", "doc_a", "doc_b")
-      .observe("ix", max(lit(nDocs)).as("index_docs"),
-        max(lit(nPostings)).as("index_postings"))
+      .observe("ix", max(lit(counters._1)).as("index_docs"),
+        max(lit(counters._2)).as("index_postings"))
   }
 
   private lazy val shingleIndexOracle: String = s"""

@@ -43,11 +43,11 @@ object IndexFs {
 
   // Built once and cached: newHadoopConf() clones the full Spark+Hadoop
   // configuration map, and several protocols call IndexFs in driver-side
-  // loops (committedBatchDirs probes per batch dir, claimId retries per
+  // loops (commit checks per batch dir, claimBatchId retries per
   // candidate). Every call site in this library runs after the driver
   // session exists, so the first call captures the session's conf.
   // `getActiveSession` is THREAD-LOCAL: the first IndexFs call can land
-  // on a user pool thread with no active session (concurrent claimId
+  // on a user pool thread with no active session (concurrent claimBatchId
   // callers do exactly this), and caching `new Configuration()` there
   // would permanently drop the session's Hadoop config — s3a credentials,
   // HA namenode mappings — for all later metadata I/O on exactly the
@@ -106,11 +106,12 @@ object IndexFs {
   }
 
   /** Recursive delete; a missing path is a no-op. THROWS when Hadoop
-    * reports failure (`delete` → false on an EXISTING path) — the rebuild
-    * cleanup in semDeDupIngest deletes stale committed `batch_*` dirs and
-    * then writes the validity marker that blesses whatever survived; a
+    * reports failure (`delete` → false on an EXISTING path) — a standing
+    * index's reset ([[StandingIndex.reset]], the first step of every
+    * ingest) deletes the stale sinks and metadata and the ensure then
+    * writes the validity marker that blesses whatever survived; a
     * silently-failed delete there is exactly the stale-append pollution
-    * the cleanup exists to prevent (r12 advisor find — mirrors rename's
+    * the reset exists to prevent (r12 advisor find — mirrors rename's
     * throw-on-false contract). */
   def delete(p: String): Unit = {
     val (fs, path) = fsOf(p)
@@ -142,7 +143,7 @@ object IndexFs {
     * through NIO `Files.createFile` (O_EXCL, one syscall); on HDFS
     * `create(overwrite=false)` is a single atomic namenode op. Losing
     * the race returns false; any OTHER I/O error (namenode down,
-    * permissions) PROPAGATES — swallowing it would spin claimId's retry
+    * permissions) PROPAGATES — swallowing it would spin claimBatchId's retry
     * loop forever on a broken filesystem. */
   def createExclusive(p: String): Boolean = {
     val (fs, path) = fsOf(p)

@@ -70,9 +70,10 @@ object Standing {
     }
 
   /** Remove the validity marker, if any — the first step of a REBUILD
-    * that must also clean derived state (stale append batches): dropping
-    * the marker before deleting anything guarantees no crash window in
-    * which a marker still claims a half-cleaned index valid. */
+    * that must also clean derived state (stale append batches; see
+    * [[StandingIndex.reset]]): dropping the marker before deleting
+    * anything guarantees no crash window in which a marker still claims a
+    * half-cleaned index valid. */
   def invalidate(root: String): Unit =
     IndexFs.delete(marker(root))
 
@@ -83,19 +84,26 @@ object Standing {
   def markValid(root: String, fp: String, payload: String = ""): Unit =
     IndexFs.writeString(marker(root), fp + "\n" + payload)
 
-  /** The reuse-or-build scaffold for indexes whose payload is two
-    * counters — one definition instead of a copy per index (r12 review
-    * find: the gram/shingle/bucketed ensures were three identical
-    * match blocks). Runs `build` (which must fully write the index)
-    * only when no valid marker exists, then records its counters. */
-  def ensureCounters(root: String, fp: String)
-                    (build: => (Long, Long)): (Long, Long) =
+  /** How an index's payload round-trips through the marker: the counters
+    * or model a reuse hands back without recomputation. */
+  final case class Codec[P](encode: P => String, decode: String => P)
+
+  /** Two ingest counters, space-separated — the gram and shingle
+    * indexes' payload. */
+  val Counters: Codec[(Long, Long)] = Codec(c => s"${c._1} ${c._2}",
+    p => { val a = p.trim.split(" "); (a(0).toLong, a(1).toLong) })
+
+  /** ENSURE: the one reuse-or-build scaffold every standing index goes
+    * through (gram, shingle, semantic dedup, PQ, IVF-PQ). Returns the
+    * payload of a completed build for exactly this fingerprint; otherwise
+    * runs `build` (which must fully write the index) and then marks it
+    * valid with the payload `build` returned. */
+  def ensure[P](root: String, fp: String, codec: Codec[P])(build: => P): P =
     validPayload(root, fp) match {
-      case Some(p) =>
-        val a = p.trim.split(" "); (a(0).toLong, a(1).toLong)
+      case Some(p) => codec.decode(p)
       case None =>
         val c = build
-        markValid(root, fp, s"${c._1} ${c._2}")
+        markValid(root, fp, codec.encode(c))
         c
     }
 }

@@ -126,33 +126,33 @@ object IvfPq {
     // mode is the full configuration surface of this ingest.
     val fp = graft.ops.Standing.fingerprint(s"$d/embeddings.parquet") +
       s":k=$nClusters" + (if (residual) ":res" else "")
-    graft.ops.Standing.validPayload(root, fp) match {
-      case Some(p) =>
-        val (cents, books, n, _, _) = parse(p)
-        (cents, books, n, root)
-      case None =>
-        val emb = Tables.embeddings(spark, d)
-        val n = emb.count()
-        val par = spark.sparkContext.defaultParallelism
-        val fanout = if (n >= graft.Tuning.PqFanoutGateVectors) par else 0
-        val cents = Similarity.trainCentroids(emb, nClusters)
-        val embP = if (fanout > 0) emb.repartition(fanout) else emb
-        val assigned = Similarity.assignClusters(embP, cents)
-        // residual mode (classic IVFADC, Jégou et al. §V): codebooks
-        // train on and codes quantize r = x − centroid(cluster(x)) — the
-        // residual's dynamic range shrinks with cluster tightness, which
-        // is exactly when the same M bytes buy more recall
-        val toCode = if (residual) residualized(assigned, cents) else assigned
-        val books = Pq.trainCodebooks(
-          if (residual) toCode else emb, fanout = fanout)
-        Pq.encode(toCode, books)
-          .select("vec_id", "cluster", "codes")
-          .write.partitionBy("cluster").mode("overwrite").parquet(root)
-        graft.ops.Standing.markValid(root, fp,
-          payload(cents, books, n, residual, trainedN = n))
-        (cents, books, n, root)
+    val (cents, books, n, _, _) = graft.ops.Standing.ensure(root, fp, Model) {
+      val emb = Tables.embeddings(spark, d)
+      val n = emb.count()
+      val par = spark.sparkContext.defaultParallelism
+      val fanout = if (n >= graft.Tuning.PqFanoutGateVectors) par else 0
+      val cents = Similarity.trainCentroids(emb, nClusters)
+      val embP = if (fanout > 0) emb.repartition(fanout) else emb
+      val assigned = Similarity.assignClusters(embP, cents)
+      // residual mode (classic IVFADC, Jégou et al. §V): codebooks
+      // train on and codes quantize r = x − centroid(cluster(x)) — the
+      // residual's dynamic range shrinks with cluster tightness, which
+      // is exactly when the same M bytes buy more recall
+      val toCode = if (residual) residualized(assigned, cents) else assigned
+      val books = Pq.trainCodebooks(
+        if (residual) toCode else emb, fanout = fanout)
+      Pq.encode(toCode, books)
+        .select("vec_id", "cluster", "codes")
+        .write.partitionBy("cluster").mode("overwrite").parquet(root)
+      (cents, books, n, residual, n)
     }
+    (cents, books, n, root)
   }
+
+  /** The payload codec over [[payload]]/[[parse]]. */
+  private val Model = graft.ops.Standing.Codec[
+      (Array[Array[Float]], Pq.Codebooks, Long, Boolean, Long)](
+    m => payload(m._1, m._2, m._3, m._4, m._5), parse)
 
   /** Replace `embedding` with the per-cluster residual x − c_cluster(x)
     * (float arithmetic, centroids a plan literal — map-only). */
@@ -279,7 +279,7 @@ object IvfPq {
     * partition. Every [[ivfPqAppend]] adds a part-file set per touched
     * cluster directory (`mode("append")`), so after N daily batches a
     * probe pays N footer opens + N small row groups per probed cluster —
-    * the same file-accretion cost `gramIndexCompact` bounds for the df
+    * the same file-accretion cost the gram index's compaction bounds for the df
     * sidecar, here multiplied by nprobe on every query. Compact reads
     * the standing index once, rewrites it `partitionBy(cluster)` with
     * each cluster hash-routed to one task (`repartition(k, cluster)` →

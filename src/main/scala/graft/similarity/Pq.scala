@@ -506,23 +506,22 @@ object Pq {
     val root =
       if (root0 != null) root0 else graft.ops.Scratch.root(spark, d, "pq_codes")
     val fp = graft.ops.Standing.fingerprint(s"$d/embeddings.parquet")
-    graft.ops.Standing.validPayload(root, fp) match {
-      case Some(payload) =>
-        val (books, n) = parseModel(payload)
-        (books, n, root)
-      case None =>
-        val emb = Tables.embeddings(spark, d)
-        val n = emb.count()
-        val par = emb.sparkSession.sparkContext.defaultParallelism
-        val fanout = if (n >= graft.Tuning.PqFanoutGateVectors) par else 0
-        val books = trainCodebooks(emb, fanout = fanout)
-        val embP = if (fanout > 0) emb.repartition(fanout) else emb
-        encode(embP, books).select("vec_id", "codes")
-          .write.mode("overwrite").parquet(root)
-        graft.ops.Standing.markValid(root, fp, modelPayload(books, n))
-        (books, n, root)
+    val (books, n) = graft.ops.Standing.ensure(root, fp, ModelCodec) {
+      val emb = Tables.embeddings(spark, d)
+      val n = emb.count()
+      val par = emb.sparkSession.sparkContext.defaultParallelism
+      val fanout = if (n >= graft.Tuning.PqFanoutGateVectors) par else 0
+      val books = trainCodebooks(emb, fanout = fanout)
+      val embP = if (fanout > 0) emb.repartition(fanout) else emb
+      encode(embP, books).select("vec_id", "codes")
+        .write.mode("overwrite").parquet(root)
+      (books, n)
     }
+    (books, n, root)
   }
+
+  private val ModelCodec = graft.ops.Standing.Codec[(Codebooks, Long)](
+    m => modelPayload(m._1, m._2), parseModel)
 
   /** Bit-exact model serialization for the validity-marker payload
     * ([[floatRowHex]] rows), so a REUSED model is byte-identical to the

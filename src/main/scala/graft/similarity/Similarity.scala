@@ -1,6 +1,7 @@
 package graft.similarity
 
 import graft.Tables
+import graft.ops.StandingIndex
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -796,13 +797,12 @@ object Similarity {
     * a full-corpus map; paying it once and appending O(batch) after is
     * the same amortization argument as the gram/shingle/PQ indexes.
     *
-    * Layout: the gram-index batch discipline — the ingest lands in a
-    * `base` subdirectory, each append in its own `batch_<id>` (a
-    * namespace streaming batch ids, which start at 0, can never collide
-    * with); a dir's `_SUCCESS` is the commit, and [[semDeDupIndex]]
-    * reads COMMITTED batches only, so a crashed half-written append is
-    * invisible until its replay overwrites it, and a replayed committed
-    * batch no-ops — exactly-once under streaming replay for free.
+    * Layout: the lifecycle's ([[graft.ops.StandingIndex]]) — the ingest
+    * lands in the reserved `base` batch, each append in its own
+    * `batch_<id>` (a namespace streaming batch ids, which start at 0, can
+    * never collide with); a dir's `_SUCCESS` is the commit, so a
+    * replayed committed batch no-ops — exactly-once under streaming
+    * replay for free.
     *
     * `planes < 0` (the DEFAULT since r13) means DERIVE the dial from the
     * corpus size ([[derivePlanes]]) — the r12 verdict's x7 finding: a
@@ -827,58 +827,73 @@ object Similarity {
     val resolved = if (planes >= 0) planes else derivePlanes(nCorpus)
     val fp = graft.ops.Standing.fingerprint(s"$d/embeddings.parquet") +
       s":p=$resolved:t=$num/$den"
-    graft.ops.Standing.validPayload(root, fp) match {
-      case Some(p) =>
-        val a = p.trim.split(" "); (a(3).toLong, a(4).toLong)
-      case None =>
-        // A REBUILD means a CLEAN index (r11 advisor find): overwrite
-        // only touches `base`, but semDeDupIndex unions base with every
-        // committed batch_* dir — after a source rewrite or a (planes, τ)
-        // change, stale appends from the prior corpus/hyperparameters
-        // would survive and pollute verdicts and the q134 rollup. Drop
-        // the old marker FIRST (a crash mid-clean must not leave a
-        // marker claiming the half-deleted index valid), then the stale
-        // batch dirs and the burned-id _claims namespace.
-        graft.ops.Standing.invalidate(root)
-        graft.ops.IndexFs.childNames(root, dirsOnly = true)
-          .filter(n => n.startsWith("batch_") || n == "_claims")
-          .foreach(n => graft.ops.IndexFs.delete(s"$root/$n"))
-        val emb = Tables.embeddings(spark, d)
-        val sigs = signatureTable(emb, resolved, nCorpus)
-        sigs.join(directVerdicts(sigs, num, den), "vec_id")
-          .select("vec_id", "sig", "micro", "dself", "keep")
-          .write.mode("overwrite").parquet(s"$root/base")
-        val (n, kept, _) = indexStats(spark, root)
-        graft.ops.Standing.markValid(root, fp,
-          s"$resolved $num $den $n $kept")
-        (n, kept)
+    val (_, _, _, n, kept) = graft.ops.Standing.ensure(root, fp, SemDeDupPayload) {
+      // ingest = reset + base batch: a REBUILD (source rewrite or a
+      // (planes, τ) change) starts from a CLEAN root — stale appends from
+      // the prior corpus/hyperparameters and the burned-id claims go
+      semDeDupIx(root, resolved, num, den, nCorpus)
+        .ingest(Tables.embeddings(spark, d))
+      val (n, kept, _) = indexStats(spark, root)
+      (resolved, num, den, n, kept)
     }
+    (n, kept)
   }
 
-  /** The committed standing index: union of every `batch_<id>` whose
-    * `_SUCCESS` exists. Half-written (crashed) batches are invisible. */
-  def semDeDupIndex(spark: SparkSession, root: String): DataFrame = {
-    val dirs = committedBatchDirs(root)
-    require(dirs.nonEmpty, s"no committed semantic-dedup batches at $root")
-    spark.read.parquet(dirs: _*)
+  /** The standing index's payload: (planes, num, den, n, kept). */
+  private val SemDeDupPayload =
+    graft.ops.Standing.Codec[(Int, Int, Int, Long, Long)](
+      p => s"${p._1} ${p._2} ${p._3} ${p._4} ${p._5}",
+      s => { val a = s.trim.split(" ")
+        (a(0).toInt, a(1).toInt, a(2).toInt, a(3).toLong, a(4).toLong) })
+
+  /** The semantic-dedup index DECLARATION at `root`: one Plain sink of
+    * (vec_id, sig, micro, dself, keep). Its build gives a batch its
+    * direct-rule verdicts — drop iff a τ-neighbor exists among standing
+    * vectors (all necessarily smaller — the id order is enforced) or
+    * smaller ids in the batch itself; on an empty index (the base batch)
+    * that is exactly [[semDeDupDirect]]. `rows` is the fan-out gate's
+    * corpus count (unknown, -1, for appends). */
+  private def semDeDupIx(root: String, planes: Int = NumPlanes,
+                         num: Int = 1, den: Int = 4,
+                         rows: Long = -1L): StandingIndex = {
+    lazy val ix: StandingIndex = StandingIndex(Seq(
+      StandingIndex.Sink("verdicts", root, StandingIndex.Plain, batch => {
+          val sigs = signatureTable(batch, planes, rows)
+          val own = dupEdges(sigs, num, den)
+          val hits = if (ix.batchIds.isEmpty) own else {
+            val (_, _, maxId) = indexStats(batch.sparkSession, root)
+            // An EMPTY batch is legal (streaming restart / no-data
+            // trigger delivers one): min(vec_id) aggregates to SQL NULL,
+            // so skip the order check (vacuously true) and still commit
+            // the empty batch, so a replay of its id no-ops
+            val minRow = batch.agg(min("vec_id")).collect()(0)
+            if (!minRow.isNullAt(0)) {
+              val minNew = minRow.getLong(0)
+              require(minNew > maxId,
+                s"semDeDupAppend: new vec_ids must exceed the standing max" +
+                  s" $maxId (got $minNew) — the direct rule is id-order-exact")
+            }
+            // both joins are bucket joins on sig; the standing side is
+            // semi-filtered to the batch's buckets by the join itself
+            val standing = ix.scan(batch.sparkSession)
+              .select("vec_id", "sig", "micro", "dself")
+            dupEdges(standing, num, den, sigs).union(own)
+          }
+          sigs.join(hits.select(col("dst").as("vec_id")).distinct()
+              .withColumn("hit", lit(true)), Seq("vec_id"), "left")
+            .select(col("vec_id"), col("sig"), col("micro"), col("dself"),
+              col("hit").isNull.as("keep"))
+        })))
+    ix
   }
 
-  private def committedBatchDirs(root: String): Seq[String] = {
-    // `base` = the one-shot ingest; `batch_<id>` = appends. Streaming
-    // batch ids start at 0, so the ingest dir must NOT share their
-    // namespace — a streaming batch 0 would otherwise see the ingest's
-    // _SUCCESS and silently no-op (drop its own rows).
-    val kids = graft.ops.IndexFs.childNames(root, dirsOnly = true)
-      .filter(n => graft.ops.IndexFs.exists(s"$root/$n/_SUCCESS"))
-    val base = kids.filter(_ == "base")
-    val batches = kids.filter(_.startsWith("batch_"))
-      .sortBy(_.stripPrefix("batch_").toLong)
-    (base ++ batches).map(n => s"$root/$n")
-  }
+  /** The standing index: the base batch plus every appended batch. */
+  def semDeDupIndex(spark: SparkSession, root: String): DataFrame =
+    semDeDupIx(root).scan(spark)
 
-  /** (n, kept, maxId) recomputed from the COMMITTED data — never from
-    * payload arithmetic, so a crash between a batch commit and its
-    * marker update self-heals on the next call instead of drifting. */
+  /** (n, kept, maxId) recomputed from the data — never from payload
+    * arithmetic, so a crash between a batch commit and its marker update
+    * self-heals on the next call instead of drifting. */
   private def indexStats(spark: SparkSession,
                          root: String): (Long, Long, Long) = {
     val idx = semDeDupIndex(spark, root)
@@ -891,60 +906,23 @@ object Similarity {
     * EXACT — not approximately — equal to a from-scratch rebuild,
     * because the direct rule's verdicts depend only on smaller ids and
     * appended ids are required to exceed every committed standing id
-    * (enforced; violating arrival order would rewrite history). A new
-    * vector is dropped iff it has a τ-neighbor among standing vectors
-    * (all necessarily smaller) or smaller ids in its own batch;
-    * standing verdicts are never touched. Hyperparameters ride the
+    * (enforced; violating arrival order would rewrite history).
+    * Standing verdicts are never touched. Hyperparameters ride the
     * payload, so an append can never mix a different (planes, τ) into
     * the index; stats are recomputed from data, never accumulated.
-    *
-    * Exactly-once: `batchId` keys the write to its own overwrite dir —
-    * a committed replay no-ops, a crashed replay overwrites its own
-    * partial, and auto-ids go through the durable `_claims` protocol
-    * ([[graft.dedup.Dedup.claimBatchId]]). */
+    * Exactly-once through the lifecycle's append (ops.StandingIndex): a
+    * committed replay no-ops, a crashed replay rewrites its own batch,
+    * and auto-ids go through the durable `_claims` protocol. */
   def semDeDupAppend(newEmb: DataFrame, root: String,
                      batchId: Long = -1L): (Long, Long) = {
-    val spark = newEmb.sparkSession
     val (fp, p) = graft.ops.Standing.current(root).getOrElse(sys.error(
       s"semDeDupAppend: no standing semantic-dedup index at $root — run" +
         " semDeDupIngest first"))
-    val a = p.trim.split(" ")
-    val (planes, num, den) = (a(0).toInt, a(1).toInt, a(2).toInt)
-    val id = if (batchId >= 0) batchId
-      else graft.dedup.Dedup.claimBatchId(root)
-    val bDir = s"$root/batch_$id"
-    if (!graft.ops.IndexFs.exists(s"$bDir/_SUCCESS")) {
-      val (_, _, maxId) = indexStats(spark, root)
-      // An EMPTY batch is legal (streaming restart / no-data trigger
-      // delivers one — r11 advisor find): min(vec_id) aggregates to SQL
-      // NULL, so getLong would NPE and kill the streaming query. Skip
-      // the order check (vacuously true) and still write the empty
-      // committed batch dir, so a replay of the same batchId no-ops
-      // exactly like any other committed batch.
-      val minRow = newEmb.agg(min("vec_id")).collect()(0)
-      if (!minRow.isNullAt(0)) {
-        val minNew = minRow.getLong(0)
-        require(minNew > maxId,
-          s"semDeDupAppend: new vec_ids must exceed the standing max" +
-            s" $maxId (got $minNew) — the direct rule is id-order-exact")
-      }
-      val newSigs = signatureTable(newEmb, planes)
-      // drop iff a τ-neighbor among (standing ∪ smaller-in-batch): both
-      // joins are bucket joins on sig; the standing side is semi-filtered
-      // to the batch's buckets by the join itself
-      val standing = semDeDupIndex(spark, root)
-        .select("vec_id", "sig", "micro", "dself")
-      val dupped = dupEdges(standing, num, den, newSigs)
-        .select(col("dst").as("vec_id"))
-        .union(dupEdges(newSigs, num, den).select(col("dst").as("vec_id")))
-        .distinct().withColumn("hit", lit(true))
-      newSigs.join(dupped, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("sig"), col("micro"), col("dself"),
-          col("hit").isNull.as("keep"))
-        .write.mode("overwrite").parquet(bDir)
-    }
-    val (n, kept, _) = indexStats(spark, root)
-    graft.ops.Standing.markValid(root, fp, s"$planes $num $den $n $kept")
+    val (planes, num, den, _, _) = SemDeDupPayload.decode(p)
+    semDeDupIx(root, planes, num, den).append(newEmb, batchId)
+    val (n, kept, _) = indexStats(newEmb.sparkSession, root)
+    graft.ops.Standing.markValid(root, fp,
+      SemDeDupPayload.encode((planes, num, den, n, kept)))
     (n, kept)
   }
 

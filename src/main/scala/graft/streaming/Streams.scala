@@ -314,95 +314,31 @@ object Streams {
     q
   }
 
-  /** Streaming maintenance of the standing gram index: every micro-batch
-    * of incoming documents appends its postings partition-wise and its df
-    * PARTIAL to the sidecar via [[graft.dedup.Dedup.gramIndexAppend]] —
-    * the ingest-side twin of the batch curation pass, so the index the
-    * gram consumers (q62/q87/q119/q125 shapes) read is never more than
-    * one trigger stale. `foreachBatch` is the right operator here (not a
-    * parquet sink): one batch feeds TWO sinks (postings + df sidecar)
-    * from one tokenize pass, which a single-sink stream can't express.
-    * Exactly-once: the foreachBatch batchId keys the append, and
-    * [[graft.dedup.Dedup.gramIndexAppend]] is IDEMPOTENT per id (each
-    * batch overwrites its own subdirectory of both sinks; a committed
-    * batch is skipped) — so a micro-batch replayed from the checkpoint
-    * after recovery, or a crash between the two sink writes, can neither
-    * double-append nor leave postings without their df partial. The spec
-    * pins stream-built index == batch-built index, and DedupSpec pins
-    * replay idempotency + partial-crash repair directly. */
-  def streamingGramIngest(docs: DataFrame, root: String,
-                          checkpoint: String): StreamingQuery =
-    docs.writeStream
+  /** Streaming maintenance of a standing index: every micro-batch goes to
+    * the index's `append` under its foreachBatch `batchId`, so the index
+    * its consumers read is never more than one trigger stale. The one
+    * hook serves every index: `Dedup.gramIndex(root).append` (postings +
+    * df sidecar from one tokenize pass — two sinks a single-sink stream
+    * could not express), the shingle indexes' append, semantic dedup's
+    * (`(b, id) => Similarity.semDeDupAppend(b, root, id)` — the direct
+    * rule is id-order-exact, so the stream must deliver vec_ids in
+    * nondecreasing batches: arrival order IS the dedup order), and
+    * IVF-PQ's (`(b, _) => IvfPq.ivfPqAppendDedup(b, root)` — extends a
+    * trained model, so a completed `ivfPqIngest` comes first).
+    *
+    * Exactly-once under checkpoint replay comes from the append: the
+    * lifecycle's appends ([[graft.ops.StandingIndex]]) are idempotent
+    * per batch id (a committed batch is skipped, a crashed one rewrites
+    * only itself); the IVF-PQ codes layout has no per-batch directory
+    * (it would break partition-discovery pruning), so its append dedups
+    * by vec_id presence instead. StreamingSpec pins stream-built ==
+    * batch-built for all four, and the IVF-PQ replay no-op. */
+  def streamingAppend(stream: DataFrame, checkpoint: String)
+                     (append: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.dedup.Dedup.gramIndexAppend(batch, root, batchId = batchId)
-      }
-      .start()
-
-  /** Streaming maintenance of the standing SHINGLE index — the
-    * [[streamingGramIngest]] twin for the similarity-join family
-    * (q31/q103/q127 shapes): every micro-batch tokenizes + shingles its
-    * documents once and appends (doc_id, hs, n) via
-    * [[graft.dedup.Dedup.shingleIndexAppend]], so the index the
-    * similarity consumers read is never more than one trigger stale.
-    * Single sink (no df sidecar — set sizes ride each row), so plain
-    * foreachBatch + the batchId-keyed idempotent append give exactly-once
-    * under replay for free; StreamingSpec pins stream-built ==
-    * batch-built. */
-  def streamingShingleIngest(docs: DataFrame, root: String,
-                             checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.dedup.Dedup.shingleIndexAppend(batch, root, batchId = batchId)
-      }
-      .start()
-
-  /** Streaming maintenance of the standing SEMANTIC-dedup index
-    * (q134's direct rule — [[graft.similarity.Similarity.semDeDupAppend]]):
-    * each micro-batch of embeddings gets its verdicts against the
-    * standing corpus plus its own smaller ids, exactly as the one-shot
-    * ingest would have assigned them (the direct rule is id-order-exact,
-    * so stream == batch is an EQUALITY, not an approximation —
-    * StreamingSpec pins it). Replays are exactly-once via the
-    * batch-dir commit protocol the append already implements. The
-    * stream must deliver vec_ids in nondecreasing batches (arrival
-    * order IS the dedup order — the rule's semantics, not a limitation:
-    * first-seen-wins). */
-  def streamingSemDedupIngest(emb: DataFrame, root: String,
-                              checkpoint: String): StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.similarity.Similarity.semDeDupAppend(batch, root,
-          batchId = batchId)
-        ()
-      }
-      .start()
-
-  /** Streaming maintenance of the standing IVF-PQ index — the last
-    * standing index without a streaming twin through r11 (gram, shingle,
-    * semdedup all had one): each micro-batch of embeddings is encoded
-    * with the STANDING model (no retrain — ivfPqAppend's contract,
-    * including its documented drift limits) and appended into the
-    * cluster-partitioned codes table, so the index ANN queries probe is
-    * never more than one trigger stale. The codes layout has no
-    * per-batch subdirectory (it would break partition-discovery
-    * pruning), so exactly-once under checkpoint replay comes from
-    * [[graft.similarity.IvfPq.ivfPqAppendDedup]]'s presence dedup
-    * instead of the batch-dir protocol: only rows whose vec_id is not
-    * already standing are appended, which replays every crash point —
-    * including a torn job commit — to the one-shot result.
-    * Prerequisite: a completed `ivfPqIngest` (streams extend a trained
-    * model; they never train one). StreamingSpec pins stream-built ==
-    * batch-built and replay no-op. */
-  def streamingIvfPqIngest(emb: DataFrame, root: String,
-                           checkpoint: String): StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.similarity.IvfPq.ivfPqAppendDedup(batch, root)
-        ()
+        append(batch, batchId)
       }
       .start()
 }

@@ -4,8 +4,8 @@ import graft.{Sessions, Tables}
 import org.apache.spark.sql.functions._
 
 /** Posting-statistics probe behind the similarity-join dispatch constant:
-  * prints, for a documents dir (optionally with the TauProbe hot-gram
-  * transform applied), the exact posting-join cost Σ_g df·(df−1)/2 (pair
+  * prints, for a documents dir (optionally with the hot-gram transform
+  * applied: one fixed 3-token phrase prepended to every doc), the exact posting-join cost Σ_g df·(df−1)/2 (pair
   * rows the posting-count plan materializes), total postings Σ_g df, the
   * max df, and the pair-rows/postings ratio the dispatch thresholds on.
   *

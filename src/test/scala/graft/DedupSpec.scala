@@ -6,6 +6,19 @@ import org.apache.spark.sql.functions._
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The documents-form join regimes, through the docs → postings
+    * adapter (and the shingle sets the prefix verify reads). */
+  private def post(docs: org.apache.spark.sql.DataFrame) =
+    Dedup.shinglePostingsOf(docs)
+  private def simJoin(docs: org.apache.spark.sql.DataFrame, tauNum: Long,
+                      tauDen: Long, hint: Option[Double] = None) =
+    Dedup.similarityJoin(post(docs), Dedup.shingleSets(docs), tauNum, tauDen,
+      hint)
+  private def prefixVerify(docs: org.apache.spark.sql.DataFrame,
+                           tauNum: Long, tauDen: Long) =
+    Dedup.similarityJoinPrefixVerify(post(docs), Dedup.shingleSets(docs),
+      tauNum, tauDen)
+
   /** Corpus with planted near-duplicates: doc 101 is doc 1 with one word
     * changed; doc 102 is an exact copy of doc 2; doc 103 is unrelated. */
   private lazy val planted = Seq(
@@ -98,7 +111,7 @@ class DedupSpec extends SparkSpec {
     // multiples of 20, shortening prefixes and dropping true pairs; the
     // integer rank math must not)
     for ((num, den) <- Seq((1L, 2L), (1L, 20L))) {
-      val got = Dedup.similarityJoin(docs, num, den).collect()
+      val got = simJoin(docs, num, den).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       // ground truth: unfiltered all-pairs over the identical shingle
       // sets, thresholded in the same integer math
@@ -224,8 +237,8 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text", "source")
     val root = java.nio.file.Files
       .createTempDirectory("gram_index_spec").toString + "/postings"
-    Dedup.gramIndexIngest(docs, root)
-    val idx = Dedup.gramIndex(spark, root)
+    Dedup.gramIndex(root).ingest(docs)
+    val idx = Dedup.gramIndex(root).scan(spark)
     // postings survive the parquet round trip exactly
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
@@ -255,11 +268,11 @@ class DedupSpec extends SparkSpec {
     // ingests (mid-flight), A queries — A must still see ITS postings
     val docsA = Tables.documents(spark, sf)
     val docsB = Tables.documents(spark, "/root/testdata/sf0.01")
-    Dedup.gramIndexIngest(docsA, rootA)
-    Dedup.gramIndexIngest(docsB, rootB)
+    Dedup.gramIndex(rootA).ingest(docsA)
+    Dedup.gramIndex(rootB).ingest(docsB)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
-    assert(rows(Dedup.dupCoverageFrom(Dedup.gramIndex(spark, rootA))) ==
+    assert(rows(Dedup.dupCoverageFrom(Dedup.gramIndex(rootA).scan(spark))) ==
       rows(Dedup.dupCoverage(docsA)),
       "interleaved ingest corrupted the standing index")
   }
@@ -270,9 +283,9 @@ class DedupSpec extends SparkSpec {
     val before = Scratch.root(spark, sf, "gen_spec")
     val fp = Standing.fingerprint(s"$sf/documents.parquet")
     var builds = 0
-    assert(Standing.ensureCounters(before, fp) { builds += 1; (1L, 2L) } ==
+    assert(Standing.ensure(before, fp, Standing.Counters) { builds += 1; (1L, 2L) } ==
       ((1L, 2L)) && builds == 1, "first ensure must build")
-    assert(Standing.ensureCounters(before, fp) { builds += 1; (9L, 9L) } ==
+    assert(Standing.ensure(before, fp, Standing.Counters) { builds += 1; (9L, 9L) } ==
       ((1L, 2L)) && builds == 1, "same root + fp must reuse, not rebuild")
     Scratch.bumpGeneration()
     val after = Scratch.root(spark, sf, "gen_spec")
@@ -281,7 +294,7 @@ class DedupSpec extends SparkSpec {
         "would time the marker reuse no-op, not the build)")
     assert(after == Scratch.root(spark, sf, "gen_spec"),
       "the new generation's root must itself be stable")
-    assert(Standing.ensureCounters(after, fp) { builds += 1; (3L, 4L) } ==
+    assert(Standing.ensure(after, fp, Standing.Counters) { builds += 1; (3L, 4L) } ==
       ((3L, 4L)) && builds == 2,
       "the fresh-generation root must REBUILD (no marker there)")
   }
@@ -295,19 +308,66 @@ class DedupSpec extends SparkSpec {
     // appending to empty roots bootstraps the index (ingest == append #1)
     val a = docs.filter(abs(xxhash64(col("doc_id"))) % 3 === 0)
     val b = docs.filter(abs(xxhash64(col("doc_id"))) % 3 =!= 0)
-    Dedup.gramIndexAppend(a, root)
-    Dedup.gramIndexAppend(b, root)
+    Dedup.gramIndex(root).append(a)
+    Dedup.gramIndex(root).append(b)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     // appended postings == one-shot postings of the union
-    assert(rows(Dedup.gramIndex(spark, root)) == rows(Dedup.gramPostings(docs)))
+    assert(rows(Dedup.gramIndex(root).scan(spark)) == rows(Dedup.gramPostings(docs)))
     // maintained df (sum of per-batch partials) == from-scratch df
-    assert(rows(Dedup.gramIndexDf(spark, root)) ==
+    assert(rows(Dedup.gramIndex(root).scan(spark, "df")) ==
       rows(Dedup.gramPostings(docs).groupBy("g")
         .agg(sum(lit(1L)).as("df"))))
     // consumers unchanged over the appended index
-    assert(rows(Dedup.dupCoverageFrom(Dedup.gramIndex(spark, root))) ==
+    assert(rows(Dedup.dupCoverageFrom(Dedup.gramIndex(root).scan(spark))) ==
       rows(Dedup.dupCoverage(docs)))
+  }
+
+  test("ingest then a named batch-0 append == from-scratch for every " +
+       "index declaration (plain and bucketed, gram and shingle); a " +
+       "re-ingest replaces every sink") {
+    // the random split above, with the first part arriving by INGEST and
+    // the second as the named batch 0 a stream's first micro-batch
+    // carries: the ingest's reserved base batch must not shadow it, and
+    // the ingest must write every sink (the plain gram df sidecar too)
+    val docs = Tables.documents(spark, sf)
+    val a = docs.filter(abs(xxhash64(col("doc_id"))) % 3 === 0)
+    val b = docs.filter(abs(xxhash64(col("doc_id"))) % 3 =!= 0)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    def dfOf(d: org.apache.spark.sql.DataFrame) =
+      rows(Dedup.gramPostings(d).groupBy("g").agg(sum(lit(1L)).as("df")))
+    def setsOf(d: org.apache.spark.sql.DataFrame) =
+      rows(Dedup.shingleSets(d))
+    val base = java.nio.file.Files
+      .createTempDirectory("ingest_append_spec").toString
+    import graft.ops.Scratch.bucketedTable
+    val gram = Dedup.gramIndex(s"$base/gram")
+    val gramB = Dedup.gramIndexBucketed(bucketedTable(spark, sf, "gram_ingapp"))
+    val sh = Dedup.shingleIndex(s"$base/shingle")
+    val shB = Dedup.shingleIndexBucketed(
+      bucketedTable(spark, sf, "shingle_ingapp"))
+    for (ix <- Seq(gram, gramB, sh, shB)) {
+      ix.ingest(a)
+      ix.append(b, batchId = 0)
+    }
+    assert(rows(gram.scan(spark)) == rows(Dedup.gramPostings(docs)))
+    assert(rows(gram.scan(spark, "df")) == dfOf(docs),
+      "plain gram df sidecar must hold the ingest's partial too")
+    assert(rows(gramB.scan(spark)) == rows(Dedup.gramPostings(docs)),
+      "a named batch 0 must not be shadowed by the bucketed ingest")
+    assert(rows(sh.scan(spark)) == setsOf(docs))
+    assert(rows(shB.scan(spark, "postings")) == rows(post(docs)))
+    assert(rows(shB.scan(spark, "sets")) == setsOf(docs),
+      "a named batch 0 must not be shadowed in the sets sidecar")
+    // re-ingest: a rebuild from `a` alone leaves no trace of batch 0
+    for (ix <- Seq(gram, gramB, sh, shB)) ix.ingest(a)
+    assert(rows(gram.scan(spark)) == rows(Dedup.gramPostings(a)))
+    assert(rows(gram.scan(spark, "df")) == dfOf(a),
+      "re-ingest must replace the df sidecar, not keep the old partials")
+    assert(rows(gramB.scan(spark)) == rows(Dedup.gramPostings(a)))
+    assert(rows(sh.scan(spark)) == setsOf(a))
+    assert(rows(shB.scan(spark, "sets")) == setsOf(a))
   }
 
   test("gram index append is idempotent per batch id: replays and " +
@@ -322,32 +382,32 @@ class DedupSpec extends SparkSpec {
     val wantPostings = rows(Dedup.gramPostings(docs))
     val wantDf = rows(Dedup.gramPostings(docs).groupBy("g")
       .agg(sum(lit(1L)).as("df")))
-    Dedup.gramIndexAppend(a, root, batchId = 0)
-    Dedup.gramIndexAppend(b, root, batchId = 1)
+    Dedup.gramIndex(root).append(a, batchId = 0)
+    Dedup.gramIndex(root).append(b, batchId = 1)
     // committed replay (the checkpoint-recovery path): a second append of
     // batch 1 must be a no-op — markers present, so not even a write job
     val marker = new java.io.File(s"$root/batch_1/_SUCCESS")
     val mtime = marker.lastModified
-    Dedup.gramIndexAppend(b, root, batchId = 1)
+    Dedup.gramIndex(root).append(b, batchId = 1)
     assert(marker.lastModified == mtime, "committed batch must be skipped")
-    assert(rows(Dedup.gramIndex(spark, root)) == wantPostings)
-    assert(rows(Dedup.gramIndexDf(spark, root)) == wantDf)
+    assert(rows(Dedup.gramIndex(root).scan(spark)) == wantPostings)
+    assert(rows(Dedup.gramIndex(root).scan(spark, "df")) == wantDf)
     // partial-crash repair: kill batch 1's df partial (the crash window
     // between the two sink writes), replay the batch — the overwrite
     // semantics must restore postings AND sidecar to exactly from-scratch
     graft.ops.Scratch.deleteRec(new java.io.File(s"${root}_df/batch_1"))
-    Dedup.gramIndexAppend(b, root, batchId = 1)
-    assert(rows(Dedup.gramIndex(spark, root)) == wantPostings)
-    assert(rows(Dedup.gramIndexDf(spark, root)) == wantDf)
+    Dedup.gramIndex(root).append(b, batchId = 1)
+    assert(rows(Dedup.gramIndex(root).scan(spark)) == wantPostings)
+    assert(rows(Dedup.gramIndex(root).scan(spark, "df")) == wantDf)
     // replay AFTER compaction: the batch's df partial was absorbed into
     // the compacted partial, so the replay must rewrite postings only —
     // re-emitting the partial would double-count every gram in the
     // batch (the r10 review find; the _COMPACTED high-water mark)
-    Dedup.gramIndexCompact(spark, root)
+    Dedup.gramIndex(root).compact(spark)
     graft.ops.Scratch.deleteRec(new java.io.File(s"$root/batch_1/_SUCCESS"))
-    Dedup.gramIndexAppend(b, root, batchId = 1)
-    assert(rows(Dedup.gramIndex(spark, root)) == wantPostings)
-    assert(rows(Dedup.gramIndexDf(spark, root)) == wantDf,
+    Dedup.gramIndex(root).append(b, batchId = 1)
+    assert(rows(Dedup.gramIndex(root).scan(spark)) == wantPostings)
+    assert(rows(Dedup.gramIndex(root).scan(spark, "df")) == wantDf,
       "replay of a compacted batch must not re-emit its df partial")
   }
 
@@ -355,19 +415,19 @@ class DedupSpec extends SparkSpec {
        "dir (the mode-overwrite window) never frees the id") {
     val root = java.nio.file.Files
       .createTempDirectory("gram_claim_spec").toString + "/postings"
-    val id0 = Dedup.claimBatchId(root)
+    val id0 = Dedup.gramIndex(root).claimBatchId()
     // the r11 review window: mode("overwrite") DELETES batch_<id> before
     // the job recreates it — under the old data-dir claim, a concurrent
     // auto-id appender could re-claim the freed id in that window and the
     // two batches would silently overwrite each other. The claim marker
     // must survive the data dir's deletion.
     graft.ops.Scratch.deleteRec(new java.io.File(s"$root/batch_$id0"))
-    val id1 = Dedup.claimBatchId(root)
+    val id1 = Dedup.gramIndex(root).claimBatchId()
     assert(id1 != id0, "a deleted data dir must not free its claimed id")
     // and claims interleave correctly with real data batches: an append
     // after two bare claims lands past both
     val docs = Tables.documents(spark, sf).limit(5)
-    Dedup.gramIndexAppend(docs, root)
+    Dedup.gramIndex(root).append(docs)
     val dataIds = Option(new java.io.File(root).listFiles())
       .map(_.toSeq).getOrElse(Seq.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("batch_"))
@@ -386,7 +446,7 @@ class DedupSpec extends SparkSpec {
     try {
       val futures = (0 until n).map { _ =>
         pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = { barrier.await(); Dedup.claimBatchId(root) }
+          def call(): Long = { barrier.await(); Dedup.gramIndex(root).claimBatchId() }
         })
       }
       val claimed = futures.map(_.get(30, java.util.concurrent.TimeUnit.SECONDS))
@@ -404,22 +464,22 @@ class DedupSpec extends SparkSpec {
     val b = docs.filter(col("doc_id") % 2 =!= 0)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
-    Dedup.gramIndexAppend(a, root, batchId = 0)
-    Dedup.gramIndexAppend(b, root, batchId = 1)
+    Dedup.gramIndex(root).append(a, batchId = 0)
+    Dedup.gramIndex(root).append(b, batchId = 1)
     // crash window: batch 1's postings committed, its df partial lost.
     // Compacting NOW would raise _COMPACTED past id 1, and batch 1's
-    // replay would skip its df write forever — gramIndexDf undercounts.
+    // replay would skip its df write forever — the df scan undercounts.
     graft.ops.Scratch.deleteRec(new java.io.File(s"${root}_df/batch_1"))
     val e = intercept[IllegalArgumentException] {
-      Dedup.gramIndexCompact(spark, root)
+      Dedup.gramIndex(root).compact(spark)
     }
     assert(e.getMessage.contains("replay"),
       s"guard must point the operator at the repair: ${e.getMessage}")
     // the prescribed repair: replay the batch, then compaction proceeds
     // and the maintained df equals from-scratch
-    Dedup.gramIndexAppend(b, root, batchId = 1)
-    Dedup.gramIndexCompact(spark, root)
-    assert(rows(Dedup.gramIndexDf(spark, root)) ==
+    Dedup.gramIndex(root).append(b, batchId = 1)
+    Dedup.gramIndex(root).compact(spark)
+    assert(rows(Dedup.gramIndex(root).scan(spark, "df")) ==
       rows(Dedup.gramPostings(docs).groupBy("g")
         .agg(sum(lit(1L)).as("df"))))
   }
@@ -438,21 +498,21 @@ class DedupSpec extends SparkSpec {
       if (kids == null) 0 else kids.count(f =>
         f.isDirectory && f.getName.startsWith("batch_"))
     }
-    Dedup.gramIndexAppend(parts(0), root)
-    Dedup.gramIndexAppend(parts(1), root)
+    Dedup.gramIndex(root).append(parts(0))
+    Dedup.gramIndex(root).append(parts(1))
     assert(sidecarDirs() == 2)
-    Dedup.gramIndexCompact(spark, root)
+    Dedup.gramIndex(root).compact(spark)
     assert(sidecarDirs() == 1, "compaction must merge partials to one")
-    Dedup.gramIndexAppend(parts(2), root) // auto id must land PAST the compacted one
+    Dedup.gramIndex(root).append(parts(2)) // auto id must land PAST the compacted one
     assert(sidecarDirs() == 2)
-    assert(rows(Dedup.gramIndex(spark, root)) == rows(Dedup.gramPostings(docs)))
-    assert(rows(Dedup.gramIndexDf(spark, root)) ==
+    assert(rows(Dedup.gramIndex(root).scan(spark)) == rows(Dedup.gramPostings(docs)))
+    assert(rows(Dedup.gramIndex(root).scan(spark, "df")) ==
       rows(Dedup.gramPostings(docs).groupBy("g").agg(sum(lit(1L)).as("df"))))
     // re-compaction converges: second call sees one partial and no-ops
-    Dedup.gramIndexCompact(spark, root)
-    Dedup.gramIndexCompact(spark, root)
+    Dedup.gramIndex(root).compact(spark)
+    Dedup.gramIndex(root).compact(spark)
     assert(sidecarDirs() == 1)
-    assert(rows(Dedup.gramIndexDf(spark, root)) ==
+    assert(rows(Dedup.gramIndex(root).scan(spark, "df")) ==
       rows(Dedup.gramPostings(docs).groupBy("g").agg(sum(lit(1L)).as("df"))))
   }
 
@@ -461,40 +521,40 @@ class DedupSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val root = java.nio.file.Files
       .createTempDirectory("shingle_index_spec").toString + "/shingles"
-    Dedup.shingleIndexIngest(docs, root)
-    val sets = Dedup.shingleIndex(spark, root)
+    Dedup.shingleIndex(root).ingest(docs)
+    val sets = Dedup.shingleIndex(root).scan(spark)
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pairs(Dedup.similarityJoinPostingCountFromShingles(sets, 1, 20)) ==
-      pairs(Dedup.similarityJoinPostingCount(docs, 1, 20)))
-    assert(pairs(Dedup.similarityJoinPrefixVerifyFromShingles(sets, 1, 2)) ==
-      pairs(Dedup.similarityJoinPrefixVerify(docs, 1, 2)))
+    assert(pairs(Dedup.similarityJoinPostingCount(Dedup.shinglePostings(sets), 1, 20)) ==
+      pairs(Dedup.similarityJoinPostingCount(post(docs), 1, 20)))
+    assert(pairs(Dedup.similarityJoinPrefixVerify(Dedup.shinglePostings(sets), sets, 1, 2)) ==
+      pairs(prefixVerify(docs, 1, 2)))
     // the probe statistic off the index equals the from-text probe
-    assert(Dedup.probePairRowsPerPostingFromShingles(sets) ==
-      Dedup.probePairRowsPerPosting(docs))
+    assert(Dedup.probePairRowsPerPosting(Dedup.shinglePostings(sets)) ==
+      Dedup.probePairRowsPerPosting(post(docs)))
   }
 
   test("bucketed shingle index: posting table + sets sidecar answer both " +
        "regimes and the probe identically to from-scratch") {
     val docs = Tables.documents(spark, sf)
     val tbl = graft.ops.Scratch.bucketedTable(spark, sf, "shingle_bspec")
-    val (nDocs, nPostings) = Dedup.shingleIndexIngestBucketed(docs, tbl)
-    val posting = Dedup.shinglePostingsBucketed(spark, tbl)
-    val sets = Dedup.shingleSetsSidecar(spark, tbl)
+    val Seq(nDocs, nPostings) = Dedup.shingleIndexBucketed(tbl).ingest(docs)
+    val posting = Dedup.shingleIndexBucketed(tbl).scan(spark, "postings")
+    val sets = Dedup.shingleIndexBucketed(tbl).scan(spark, "sets")
     // the observed ingest counters are the real table sizes
     assert(nDocs == sets.count(), "observed docs != sets rows")
     assert(nPostings == posting.count(), "observed postings != posting rows")
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pairs(Dedup.similarityJoinPostingCountFromPostings(posting, 1, 20)) ==
-      pairs(Dedup.similarityJoinPostingCount(docs, 1, 20)))
-    assert(pairs(Dedup.similarityJoinPrefixVerifyFromPostings(posting, sets, 1, 2)) ==
-      pairs(Dedup.similarityJoinPrefixVerify(docs, 1, 2)))
-    assert(Dedup.probePairRowsPerPostingFromPostings(posting) ==
-      Dedup.probePairRowsPerPosting(docs))
+    assert(pairs(Dedup.similarityJoinPostingCount(posting, 1, 20)) ==
+      pairs(Dedup.similarityJoinPostingCount(post(docs), 1, 20)))
+    assert(pairs(Dedup.similarityJoinPrefixVerify(posting, sets, 1, 2)) ==
+      pairs(prefixVerify(docs, 1, 2)))
+    assert(Dedup.probePairRowsPerPosting(posting) ==
+      Dedup.probePairRowsPerPosting(post(docs)))
     // and the full dispatcher routed over the index == the from-text one
-    assert(pairs(Dedup.similarityJoinFromPostings(posting, sets, 1, 2)) ==
-      pairs(Dedup.similarityJoin(docs, 1, 2)))
+    assert(pairs(Dedup.similarityJoin(posting, sets, 1, 2)) ==
+      pairs(simJoin(docs, 1, 2)))
   }
 
   test("bucketed index appends: batches == one-shot bucketed ingest for " +
@@ -506,9 +566,9 @@ class DedupSpec extends SparkSpec {
       df.collect().map(_.toString).sorted.toSeq
     // gram: two appends (the first bootstraps the table) == one-shot
     val gtbl = graft.ops.Scratch.bucketedTable(spark, sf, "gram_appb")
-    Dedup.gramIndexAppendBucketed(a, gtbl)
-    Dedup.gramIndexAppendBucketed(b, gtbl)
-    val gidx = Dedup.gramIndexBucketed(spark, gtbl)
+    Dedup.gramIndexBucketed(gtbl).append(a)
+    Dedup.gramIndexBucketed(gtbl).append(b)
+    val gidx = Dedup.gramIndexBucketed(gtbl).scan(spark)
     assert(rows(gidx.select("doc_id", "source", "g")) ==
       rows(Dedup.gramPostings(docs)))
     // exchange-free df aggregation survives the multi-file buckets
@@ -523,20 +583,20 @@ class DedupSpec extends SparkSpec {
     // shingle: appends == one-shot for postings AND the sets sidecar
     val stbl = graft.ops.Scratch.bucketedTable(spark, sf, "shingle_appb")
     val stbl2 = graft.ops.Scratch.bucketedTable(spark, sf, "shingle_oneb")
-    Dedup.shingleIndexAppendBucketed(a, stbl)
-    Dedup.shingleIndexAppendBucketed(b, stbl)
-    Dedup.shingleIndexIngestBucketed(docs, stbl2)
-    assert(rows(Dedup.shinglePostingsBucketed(spark, stbl)) ==
-      rows(Dedup.shinglePostingsBucketed(spark, stbl2)))
-    assert(rows(Dedup.shingleSetsSidecar(spark, stbl)) ==
-      rows(Dedup.shingleSetsSidecar(spark, stbl2)))
+    Dedup.shingleIndexBucketed(stbl).append(a)
+    Dedup.shingleIndexBucketed(stbl).append(b)
+    Dedup.shingleIndexBucketed(stbl2).ingest(docs)
+    assert(rows(Dedup.shingleIndexBucketed(stbl).scan(spark, "postings")) ==
+      rows(Dedup.shingleIndexBucketed(stbl2).scan(spark, "postings")))
+    assert(rows(Dedup.shingleIndexBucketed(stbl).scan(spark, "sets")) ==
+      rows(Dedup.shingleIndexBucketed(stbl2).scan(spark, "sets")))
     // and the similarity consumers answer identically off the appended form
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pairs(Dedup.similarityJoinFromPostings(
-        Dedup.shinglePostingsBucketed(spark, stbl),
-        Dedup.shingleSetsSidecar(spark, stbl), 1, 2)) ==
-      pairs(Dedup.similarityJoin(docs, 1, 2)))
+    assert(pairs(Dedup.similarityJoin(
+        Dedup.shingleIndexBucketed(stbl).scan(spark, "postings"),
+        Dedup.shingleIndexBucketed(stbl).scan(spark, "sets"), 1, 2)) ==
+      pairs(simJoin(docs, 1, 2)))
   }
 
   test("bucketed appends are exactly-once per batch id: committed replays " +
@@ -554,36 +614,36 @@ class DedupSpec extends SparkSpec {
     def gPartitions(): Int = Option(new java.io.File(gpath).listFiles())
       .map(_.count(f => f.isDirectory && f.getName.startsWith("batch=")))
       .getOrElse(0)
-    Dedup.gramIndexAppendBucketed(a, gtbl, batchId = 0)
-    Dedup.gramIndexAppendBucketed(b, gtbl, batchId = 1)
-    assert(rows(Dedup.gramIndexBucketed(spark, gtbl)) == wantG)
+    Dedup.gramIndexBucketed(gtbl).append(a, batchId = 0)
+    Dedup.gramIndexBucketed(gtbl).append(b, batchId = 1)
+    assert(rows(Dedup.gramIndexBucketed(gtbl).scan(spark)) == wantG)
     // committed replay: manifest marker present → no write job, no dupes
-    Dedup.gramIndexAppendBucketed(b, gtbl, batchId = 1)
-    assert(rows(Dedup.gramIndexBucketed(spark, gtbl)) == wantG,
+    Dedup.gramIndexBucketed(gtbl).append(b, batchId = 1)
+    assert(rows(Dedup.gramIndexBucketed(gtbl).scan(spark)) == wantG,
       "a committed replay must not double-append")
     // crash replay: manifest lost (crash before marker) → the replay
     // rewrites ONLY its own partition (dynamic overwrite), still no dupes
     graft.ops.Scratch.deleteRec(
       new java.io.File(s"${gpath}_meta/batches/1"))
-    Dedup.gramIndexAppendBucketed(b, gtbl, batchId = 1)
-    assert(rows(Dedup.gramIndexBucketed(spark, gtbl)) == wantG,
+    Dedup.gramIndexBucketed(gtbl).append(b, batchId = 1)
+    assert(rows(Dedup.gramIndexBucketed(gtbl).scan(spark)) == wantG,
       "a crash replay must rewrite only its own partition")
     // compaction: one partition left, consumers identical, replays of
     // absorbed batches are no-ops, later appends land past the mark
     assert(gPartitions() == 2)
-    Dedup.gramIndexCompactBucketed(spark, gtbl)
+    Dedup.gramIndexBucketed(gtbl).compact(spark)
     assert(gPartitions() == 1, "compaction must merge to one partition")
-    assert(rows(Dedup.gramIndexBucketed(spark, gtbl)) == wantG)
-    Dedup.gramIndexAppendBucketed(b, gtbl, batchId = 1) // absorbed: no-op
-    assert(rows(Dedup.gramIndexBucketed(spark, gtbl)) == wantG,
+    assert(rows(Dedup.gramIndexBucketed(gtbl).scan(spark)) == wantG)
+    Dedup.gramIndexBucketed(gtbl).append(b, batchId = 1) // absorbed: no-op
+    assert(rows(Dedup.gramIndexBucketed(gtbl).scan(spark)) == wantG,
       "replay of a compacted batch must be a no-op")
-    Dedup.gramIndexCompactBucketed(spark, gtbl) // single partition: no-op
-    assert(rows(Dedup.gramIndexBucketed(spark, gtbl)) == wantG)
+    Dedup.gramIndexBucketed(gtbl).compact(spark) // single partition: no-op
+    assert(rows(Dedup.gramIndexBucketed(gtbl).scan(spark)) == wantG)
     // exchange-free df agg survives compaction's rewrite
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val dfAgg = Dedup.gramIndexBucketed(spark, gtbl)
+      val dfAgg = Dedup.gramIndexBucketed(gtbl).scan(spark)
         .groupBy("g").agg(count(lit(1)).as("df"))
       dfAgg.collect()
       assert(graft.ops.Scale.countExchanges(dfAgg) == 0,
@@ -592,28 +652,28 @@ class DedupSpec extends SparkSpec {
     // ---- shingle bucketed: two sinks, crash window, compaction ----
     val stbl = graft.ops.Scratch.bucketedTable(spark, sf, "shingle_xonce")
     val spath = graft.ops.Scale.bucketPath(stbl)
-    Dedup.shingleIndexAppendBucketed(a, stbl, batchId = 0)
-    Dedup.shingleIndexAppendBucketed(b, stbl, batchId = 1)
-    val wantP = rows(Dedup.shinglePostingsBucketed(spark, stbl))
-    val wantS = rows(Dedup.shingleSetsSidecar(spark, stbl))
+    Dedup.shingleIndexBucketed(stbl).append(a, batchId = 0)
+    Dedup.shingleIndexBucketed(stbl).append(b, batchId = 1)
+    val wantP = rows(Dedup.shingleIndexBucketed(stbl).scan(spark, "postings"))
+    val wantS = rows(Dedup.shingleIndexBucketed(stbl).scan(spark, "sets"))
     // committed replay no-ops both sinks
-    Dedup.shingleIndexAppendBucketed(b, stbl, batchId = 1)
-    assert(rows(Dedup.shinglePostingsBucketed(spark, stbl)) == wantP)
-    assert(rows(Dedup.shingleSetsSidecar(spark, stbl)) == wantS)
+    Dedup.shingleIndexBucketed(stbl).append(b, batchId = 1)
+    assert(rows(Dedup.shingleIndexBucketed(stbl).scan(spark, "postings")) == wantP)
+    assert(rows(Dedup.shingleIndexBucketed(stbl).scan(spark, "sets")) == wantS)
     // crash between the two sinks: sets committed, postings manifest
     // missing → compaction must REFUSE (the replay-starvation guard)...
     graft.ops.Scratch.deleteRec(
       new java.io.File(s"${spath}_meta/batches/1"))
     val e = intercept[IllegalArgumentException] {
-      Dedup.shingleIndexCompactBucketed(spark, stbl)
+      Dedup.shingleIndexBucketed(stbl).compact(spark)
     }
     assert(e.getMessage.contains("replay"))
     // ...and the replay repairs, after which compaction proceeds with
     // both sinks equal to the pre-compaction state
-    Dedup.shingleIndexAppendBucketed(b, stbl, batchId = 1)
-    Dedup.shingleIndexCompactBucketed(spark, stbl)
-    assert(rows(Dedup.shinglePostingsBucketed(spark, stbl)) == wantP)
-    assert(rows(Dedup.shingleSetsSidecar(spark, stbl)) == wantS)
+    Dedup.shingleIndexBucketed(stbl).append(b, batchId = 1)
+    Dedup.shingleIndexBucketed(stbl).compact(spark)
+    assert(rows(Dedup.shingleIndexBucketed(stbl).scan(spark, "postings")) == wantP)
+    assert(rows(Dedup.shingleIndexBucketed(stbl).scan(spark, "sets")) == wantS)
     // sidecar dirs bounded after compaction
     val setsDirs = Option(new java.io.File(spath + "_sets").listFiles())
       .map(_.count(f => f.isDirectory && f.getName.startsWith("batch_")))
@@ -629,9 +689,9 @@ class DedupSpec extends SparkSpec {
     // degenerate cap: the sub-universe is the full universe, so the
     // result equals the exact posting-count join bit-for-bit
     for ((tn, td) <- Seq((1L, 20L), (1L, 2L)))
-      assert(pairs(Dedup.similarityJoinRareGrams(docs, tn, td,
+      assert(pairs(Dedup.similarityJoinRareGrams(post(docs), tn, td,
           dfCap = Long.MaxValue)) ==
-        pairs(Dedup.similarityJoinPostingCount(docs, tn, td)),
+        pairs(Dedup.similarityJoinPostingCount(post(docs), tn, td)),
         s"cap=∞ must equal the exact join at tau=$tn/$td")
     // planted contract check: d1/d2 share ONLY the corpus-wide hot
     // phrase → excluded under the cap (no rare co-occurrence), while the
@@ -644,9 +704,9 @@ class DedupSpec extends SparkSpec {
       (3L, s"$hot lorem ipsum dolor sit amet consectetur"),
       (4L, s"$hot lorem ipsum dolor sit amet consectetuz"))
       .toDF("doc_id", "text")
-    val capped = pairs(Dedup.similarityJoinRareGrams(planted, 1, 20,
+    val capped = pairs(Dedup.similarityJoinRareGrams(post(planted), 1, 20,
       dfCap = 2)).map(p => (p._1, p._2))
-    val exact = pairs(Dedup.similarityJoinPostingCount(planted, 1, 20))
+    val exact = pairs(Dedup.similarityJoinPostingCount(post(planted), 1, 20))
       .map(p => (p._1, p._2))
     assert(exact.contains((1L, 2L)),
       "exact join must report the boilerplate-only pair")
@@ -692,8 +752,8 @@ class DedupSpec extends SparkSpec {
     assert(cap == maxDf, s"bounded-df corpus: derived cap $cap == max df $maxDf")
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pairs(Dedup.similarityJoinRareGrams(docs, 1, 20)) ==
-      pairs(Dedup.similarityJoinPostingCount(docs, 1, 20)),
+    assert(pairs(Dedup.similarityJoinRareGrams(post(docs), 1, 20)) ==
+      pairs(Dedup.similarityJoinPostingCount(post(docs), 1, 20)),
       "derived-cap join must equal the exact join on a bounded-df corpus")
     // a DOMINANT hot gram (df=100 over a 300-posting corpus: 4950 pair
     // rows > 16 × 300 postings) breaches the cumulative budget, so the
@@ -709,8 +769,8 @@ class DedupSpec extends SparkSpec {
     assert(hotCap == bruteCap(hotPosting, Dedup.PostingMaxPairRowsPerPosting),
       "derived cap must match brute force on the hot corpus too")
     // and the derived-cap join over that corpus matches the explicit form
-    assert(pairs(Dedup.similarityJoinRareGrams(hotDocs, 1, 20)) ==
-      pairs(Dedup.similarityJoinRareGrams(hotDocs, 1, 20, hotCap)),
+    assert(pairs(Dedup.similarityJoinRareGrams(post(hotDocs), 1, 20)) ==
+      pairs(Dedup.similarityJoinRareGrams(post(hotDocs), 1, 20, hotCap)),
       "derived-cap join == explicit join at the derived cap")
   }
 
@@ -742,7 +802,7 @@ class DedupSpec extends SparkSpec {
     assert(sfiles.nonEmpty)
     assert(rows(Dedup.qShingleIndex(spark, sf)) == s1)
     assert(files(sroot) == sfiles, "second q127 call must not re-ingest")
-    // bucketed shingle index (q128) twin — marker lives in the table path
+    // bucketed shingle index (q128) twin — data files live in the table path
     val tpath = graft.ops.Scale.bucketPath(
       graft.ops.Scratch.bucketedTable(spark, sf, "shingle_ix"))
     val b1 = rows(Dedup.qShingleBucketed(spark, sf))
@@ -763,20 +823,20 @@ class DedupSpec extends SparkSpec {
     val root2 = s"$base/oneshot"
     val a = docs.filter(abs(xxhash64(col("doc_id"))) % 2 === 0)
     val b = docs.filter(abs(xxhash64(col("doc_id"))) % 2 =!= 0)
-    Dedup.shingleIndexAppend(a, root, batchId = 0)
-    Dedup.shingleIndexAppend(b, root, batchId = 1)
-    Dedup.shingleIndexIngest(docs, root2)
+    Dedup.shingleIndex(root).append(a, batchId = 0)
+    Dedup.shingleIndex(root).append(b, batchId = 1)
+    Dedup.shingleIndex(root2).ingest(docs)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
-    assert(rows(Dedup.shingleIndex(spark, root)) ==
-      rows(Dedup.shingleIndex(spark, root2)))
+    assert(rows(Dedup.shingleIndex(root).scan(spark)) ==
+      rows(Dedup.shingleIndex(root2).scan(spark)))
     // committed replay: markers present → not even a write job
     val marker = new java.io.File(s"$root/batch_1/_SUCCESS")
     val mtime = marker.lastModified
-    Dedup.shingleIndexAppend(b, root, batchId = 1)
+    Dedup.shingleIndex(root).append(b, batchId = 1)
     assert(marker.lastModified == mtime, "committed batch must be skipped")
-    assert(rows(Dedup.shingleIndex(spark, root)) ==
-      rows(Dedup.shingleIndex(spark, root2)))
+    assert(rows(Dedup.shingleIndex(root).scan(spark)) ==
+      rows(Dedup.shingleIndex(root2).scan(spark)))
   }
 
   test("similarityJoin regimes agree pairwise across the crossover taus") {
@@ -787,8 +847,8 @@ class DedupSpec extends SparkSpec {
     for ((tn, td) <- Seq((1L, 5L), (1L, 4L), (1L, 3L), (2L, 5L))) {
       def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val pc = pairs(Dedup.similarityJoinPostingCount(docs, tn, td))
-      val pv = pairs(Dedup.similarityJoinPrefixVerify(docs, tn, td))
+      val pc = pairs(Dedup.similarityJoinPostingCount(post(docs), tn, td))
+      val pv = pairs(prefixVerify(docs, tn, td))
       assert(pc == pv, s"regimes disagree at tau=$tn/$td: " +
         s"${(pc diff pv).take(3)} only-posting, ${(pv diff pc).take(3)} only-prefix")
       // guard against vacuous agreement: the most permissive probed tau
@@ -802,9 +862,9 @@ class DedupSpec extends SparkSpec {
     // bounded-df corpus (every GenScale sf sits at ratio ~0.5-4.9): the
     // probe stays under the threshold and tau=1/2 takes the posting plan
     // (no df-rank window in it)
-    assert(Dedup.probePairRowsPerPosting(docs) <=
+    assert(Dedup.probePairRowsPerPosting(post(docs)) <=
       Dedup.PostingMaxPairRowsPerPosting)
-    assert(!Dedup.similarityJoin(docs, 1, 2)
+    assert(!simJoin(docs, 1, 2)
       .queryExecution.executedPlan.toString.contains("row_number"))
     // a corpus-wide hot gram (df = corpus size) drives the ratio over the
     // threshold: replicate the corpus 12x and prepend one fixed phrase
@@ -812,21 +872,21 @@ class DedupSpec extends SparkSpec {
         .withColumn("doc_id", col("doc_id") + lit(i * 1000000L))
         .withColumn("text", concat(lit("aqa bqb cqc "), col("text"))))
       .reduce(_.unionAll(_))
-    assert(Dedup.probePairRowsPerPosting(hot) >
+    assert(Dedup.probePairRowsPerPosting(post(hot)) >
       Dedup.PostingMaxPairRowsPerPosting)
     // the hint bypasses the probe and forces the regime either way; the
     // heavy-tail route is the prefix plan (df-rank window present)
-    assert(Dedup.similarityJoin(docs, 1, 2, Some(17.0))
+    assert(simJoin(docs, 1, 2, Some(17.0))
       .queryExecution.executedPlan.toString.contains("row_number"))
-    assert(!Dedup.similarityJoin(docs, 1, 2, Some(1.0))
+    assert(!simJoin(docs, 1, 2, Some(1.0))
       .queryExecution.executedPlan.toString.contains("row_number"))
     // r11: LOW tau dispatches on the tail too — the planted-hot-gram
-    // measurement (TauProbe hotgram, sf1, tau=1/20: posting-count 218 s
+    // measurement (hot-gram corpus, sf1, tau=1/20: posting-count 218 s
     // with 250 GB spill vs prefix 10.1 s) killed the old "low tau never
     // probes" rule; a heavy tail routes to prefix at every tau now
-    assert(Dedup.similarityJoin(docs, 1, 20, Some(1e9))
+    assert(simJoin(docs, 1, 20, Some(1e9))
       .queryExecution.executedPlan.toString.contains("row_number"))
-    assert(!Dedup.similarityJoin(docs, 1, 20, Some(1.0))
+    assert(!simJoin(docs, 1, 20, Some(1.0))
       .queryExecution.executedPlan.toString.contains("row_number"))
   }
 
@@ -842,9 +902,9 @@ class DedupSpec extends SparkSpec {
       assert(total == dist, s"$what emitted duplicate pairs: $total rows, $dist distinct")
     }
     assertDistinctPairs(
-      Dedup.similarityJoin(Tables.documents(spark, sf), 1, 20), "similarityJoin tau=1/20 (posting-count)")
+      simJoin(Tables.documents(spark, sf), 1, 20), "similarityJoin tau=1/20 (posting-count)")
     assertDistinctPairs(
-      Dedup.similarityJoin(Tables.documents(spark, sf), 1, 2), "similarityJoin tau=1/2 (prefix+verify)")
+      simJoin(Tables.documents(spark, sf), 1, 2), "similarityJoin tau=1/2 (prefix+verify)")
     assertDistinctPairs(Dedup.minhashVerifyPairs(spark, sf), "minhashVerifyPairs")
   }
 }

@@ -309,8 +309,8 @@ class PlanAuditSpec extends SparkSpec {
     import graft.dedup.Dedup
     val docs = Tables.documents(spark, sf)
     val tbl = graft.ops.Scratch.bucketedTable(spark, sf, "gram_spec")
-    Dedup.gramIndexIngestBucketed(docs, tbl)
-    val idx = Dedup.gramIndexBucketed(spark, tbl)
+    Dedup.gramIndexBucketed(tbl).ingest(docs)
+    val idx = Dedup.gramIndexBucketed(tbl).scan(spark)
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // force the shuffle-join shape (tiny SF would broadcast and prove
     // nothing); at index scale SMJ is what the planner picks anyway
@@ -341,8 +341,8 @@ class PlanAuditSpec extends SparkSpec {
     import graft.dedup.Dedup
     val docs = Tables.documents(spark, sf)
     val tbl = graft.ops.Scratch.bucketedTable(spark, sf, "shingle_spec")
-    Dedup.shingleIndexIngestBucketed(docs, tbl)
-    val posting = Dedup.shinglePostingsBucketed(spark, tbl)
+    Dedup.shingleIndexBucketed(tbl).ingest(docs)
+    val posting = Dedup.shingleIndexBucketed(tbl).scan(spark, "postings")
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // force the shuffle-join shape (tiny SF would broadcast and prove
     // nothing); at index scale SMJ is what the planner picks anyway
@@ -355,15 +355,15 @@ class PlanAuditSpec extends SparkSpec {
       // full posting-count consumer: bucketed scan → SMJ on g (no
       // exchange) → pair groupBy (the one NECESSARY shuffle, keyed by
       // doc pair, not g)
-      val joined = Dedup.similarityJoinPostingCountFromPostings(posting, 1, 2)
+      val joined = Dedup.similarityJoinPostingCount(posting, 1, 2)
       joined.collect()
       assert(Scale.countExchanges(joined) == 1,
         s"bucketed posting-count join must shuffle only at the pair " +
           s"groupBy:\n${plan(joined)}")
       // the plain-index twin of the same consumer pays the g-keyed
       // exchanges the bucketed table removed
-      val sets = Dedup.shingleSetsSidecar(spark, tbl)
-      val plainJoined = Dedup.similarityJoinPostingCountFromPostings(
+      val sets = Dedup.shingleIndexBucketed(tbl).scan(spark, "sets")
+      val plainJoined = Dedup.similarityJoinPostingCount(
         Dedup.shinglePostings(sets), 1, 2)
       plainJoined.collect()
       assert(Scale.countExchanges(plainJoined) > 1,

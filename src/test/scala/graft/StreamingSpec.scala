@@ -208,15 +208,15 @@ class StreamingSpec extends SparkSpec {
     val root = s"$base/postings"
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = Streams.streamingGramIngest(stream, root, s"$base/ckpt")
+    val q = Streams.streamingAppend(stream, s"$base/ckpt")(Dedup.gramIndex(root).append)
     try q.processAllAvailable() finally q.stop()
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     val allDocs = spark.read.parquet(dir)
     // two micro-batch appends == one batch ingest of the union, postings
     // AND the monoid-merged df sidecar (doc 4 is sub-n: no postings)
-    assert(rows(Dedup.gramIndex(spark, root)) == rows(Dedup.gramPostings(allDocs)))
-    assert(rows(Dedup.gramIndexDf(spark, root)) ==
+    assert(rows(Dedup.gramIndex(root).scan(spark)) == rows(Dedup.gramPostings(allDocs)))
+    assert(rows(Dedup.gramIndex(root).scan(spark, "df")) ==
       rows(Dedup.gramPostings(allDocs).groupBy("g").agg(sum(lit(1L)).as("df"))))
   }
 
@@ -246,15 +246,15 @@ class StreamingSpec extends SparkSpec {
     val root = s"$base/shingles"
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = Streams.streamingShingleIngest(stream, root, s"$base/ckpt")
+    val q = Streams.streamingAppend(stream, s"$base/ckpt")(Dedup.shingleIndex(root).append)
     try q.processAllAvailable() finally q.stop()
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     // two micro-batch appends == one batch ingest of the union
     val root2 = s"$base/oneshot"
-    graft.dedup.Dedup.shingleIndexIngest(spark.read.parquet(dir), root2)
-    assert(rows(Dedup.shingleIndex(spark, root)) ==
-      rows(Dedup.shingleIndex(spark, root2)))
+    graft.dedup.Dedup.shingleIndex(root2).ingest(spark.read.parquet(dir))
+    assert(rows(Dedup.shingleIndex(root).scan(spark)) ==
+      rows(Dedup.shingleIndex(root2).scan(spark)))
   }
 
   test("stream-static dedup: streamed docs anti-join the historical corpus") {
@@ -810,7 +810,8 @@ class StreamingSpec extends SparkSpec {
       StructField("label", IntegerType)))
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = Streams.streamingSemDedupIngest(stream, root, s"$base/ckpt")
+    val q = Streams.streamingAppend(stream, s"$base/ckpt") { (b, id) =>
+      Similarity.semDeDupAppend(b, root, id); () }
     try q.processAllAvailable() finally q.stop()
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "keep").collect()
@@ -857,7 +858,8 @@ class StreamingSpec extends SparkSpec {
       StructField("label", IntegerType)))
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = Streams.streamingIvfPqIngest(stream, rootS, s"$base/ckpt")
+    val q = Streams.streamingAppend(stream, s"$base/ckpt") { (b, _) =>
+      IvfPq.ivfPqAppendDedup(b, rootS); () }
     try q.processAllAvailable() finally q.stop()
     def codes(root: String) = spark.read.parquet(root)
       .collect().map(_.toString).sorted.toSeq
