@@ -2,7 +2,7 @@ package graft.dedup
 
 import graft.Tables
 import graft.ops.StandingIndex
-import graft.ops.StandingIndex.{Bucketed, Plain, Sink}
+import graft.ops.StandingIndex.{Bucketed, Concat, Plain, Sink}
 import graft.text.Text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -336,17 +336,7 @@ object Dedup {
     * plans exchange-free). Callers that track corpus statistics skip it
     * via the hint parameter. */
   def probePairRowsPerPosting(posting: DataFrame): Double = {
-    // The statistic is blind to partitioning, so any repartition below
-    // it is dropped: the docs adapter's doc_id exchange exists for the
-    // joins (it makes their pair aggregation local), and the probe
-    // shuffles partial counts once, on g, without it.
-    val unbarriered = org.apache.spark.sql.GraftBridge.ofRows(
-      posting.sparkSession,
-      org.apache.spark.sql.GraftBridge.analyzed(posting).transform {
-        case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
-          r.child
-      })
-    val r = unbarriered
+    val r = posting
       .groupBy("g").agg(count(lit(1)).as("df"))
       .agg(sum(col("df") * (col("df") - 1) / 2).as("pair_rows"),
         sum(col("df")).as("postings"))
@@ -416,13 +406,15 @@ object Dedup {
     * tokenize+shingle projection into the joins and re-evaluates it per
     * candidate pair), and it leaves the postings doc_id-partitioned, so
     * a broadcast posting join aggregates its pairs with no shuffle. */
-  def shingleSets(docs: DataFrame): DataFrame = docs
+  def shingleSets(docs: DataFrame): DataFrame =
+    unbarrieredSets(docs).repartition(col("doc_id"))
+
+  private def unbarrieredSets(docs: DataFrame): DataFrame = docs
     .withColumn("toks", Text.tokens)
     .filter(size(col("toks")) >= 3)
     .select(col("doc_id"),
       graft.functions.exprs.gram3SetSorted(col("toks")).as("hs"))
     .withColumn("n", size(col("hs")))
-    .repartition(col("doc_id"))
 
   /** The ONE docs → postings adapter: the (doc_id, n, g) posting form
     * of [[shingleSets]] (q132, the specs, and — sharing the sets frame
@@ -457,8 +449,8 @@ object Dedup {
   def shingleIndexBucketed(table: String, buckets: Int = 32): StandingIndex = {
     val sets = graft.ops.Scale.bucketPath(table) + "_sets"
     graft.ops.Scratch.track(sets)
-    StandingIndex(Seq(Sink("sets", sets, Plain),
-        Sink("postings", table, Bucketed("g", buckets), shinglePostings)),
+    StandingIndex(Seq(Sink("sets", sets, Plain, merge = Concat),
+        Sink("postings", table, Bucketed("g", buckets), shinglePostings, Concat)),
       shingleSets, shingleCounters)
   }
 
@@ -582,11 +574,15 @@ object Dedup {
   }
 
   /** [[similarityJoin]] over a document frame: the adapter's postings
-    * and the sets from one [[shingleSets]] frame (one exchange, reused). */
+    * and the sets from one [[shingleSets]] frame (one exchange, reused).
+    * The df-tail probe reads the sets WITHOUT the doc_id barrier: the
+    * exchange exists for the joins (it makes their pair aggregation
+    * local), and the probe shuffles partial counts once, on g. */
   private def similarityJoinOf(docs: DataFrame, tauNum: Long,
                                tauDen: Long): DataFrame = {
     val sets = shingleSets(docs)
-    similarityJoin(shinglePostings(sets), sets, tauNum, tauDen)
+    similarityJoin(shinglePostings(sets), sets, tauNum, tauDen,
+      Some(probePairRowsPerPosting(shinglePostings(unbarrieredSets(docs)))))
   }
 
   def qSimJoinPrefix(spark: SparkSession, d: String): DataFrame =
@@ -975,7 +971,9 @@ object Dedup {
     * corpus three times per curation pass instead of zero. Two sinks from
     * one tokenize pass: "postings" (doc_id, source, g) in `root`, and
     * "df" — each batch's mergeable df partial ([[gramDfState]]) in
-    * `root_df`, merged by SUM on scan and on compaction. A daily curation
+    * `root_df`, merged by SUM on scan and on compaction (which rewrites
+    * only this O(grams) sidecar; the postings keep their batch dirs). A
+    * daily curation
     * pass thus pays O(batch), never O(corpus): neither the postings
     * re-tokenize nor the df re-aggregation touches a prior batch.
     * Ingest counters: (posting rows, ~distinct grams — the HLL sketch,
@@ -1000,8 +998,8 @@ object Dedup {
     * nothing. */
   def gramIndexBucketed(table: String, n: Int = 8,
                         buckets: Int = 32): StandingIndex =
-    StandingIndex(Seq(Sink("postings", table, Bucketed("g", buckets))),
-      gramPostings(_, n))
+    StandingIndex(Seq(Sink("postings", table, Bucketed("g", buckets),
+        merge = Concat)), gramPostings(_, n))
 
   /** Mergeable df state of ONE postings batch — the gram-index twin of
     * [[graft.ops.Incremental.aggState]]: df counts are a sum, so partial

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions.{col, lit}
   * Layouts:
   *  - `Plain`: the sink is a directory of `batch_<id>` subdirectories,
   *    each written with OVERWRITE; its `_SUCCESS` is the batch's commit.
-  *    Scans read the directory recursively (batch dirs are plain
+  *    Scans read the committed batch dirs only, so the files of a
+  *    crashed write stay invisible until its replay (batch dirs are plain
   *    subdirectories, not hive partitions, so the schema never grows a
-  *    phantom column; `_`-prefixed metadata stays invisible to Spark).
+  *    phantom column).
   *  - `Bucketed(key, n)`: the sink is a metastore table partitioned by
   *    `batch` and bucketed+sorted on `key`. A batch is one `batch=<id>`
   *    partition written through DYNAMIC partition overwrite (a replay
@@ -41,8 +42,8 @@ import org.apache.spark.sql.functions.{col, lit}
   * for one of its own committed batches.
   *
   * Exactly-once: an append resolves its id (named, or claimed through
-  * `_claims`), no-ops if compaction absorbed it, skips every sink that
-  * already committed the id, writes the rest in declared order (the
+  * `_claims`), skips every sink that already committed the id or whose
+  * compaction absorbed it, writes the rest in declared order (the
   * incoming rows prepped ONCE and shared), and commits the bucketed
   * manifest last. Every crash point is repaired by replaying the batch.
   *
@@ -103,8 +104,8 @@ final case class StandingIndex(sinks: Seq[StandingIndex.Sink],
   }
 
   private def write(rows: DataFrame, id: Long, observe: Boolean): Seq[Long] = {
-    if (id != Base && id <= compactedThrough) return Nil // absorbed
-    val todo = sinks.filterNot(committed(_, id))
+    val absorbed = id <= compactedThrough
+    val todo = sinks.filterNot(s => committed(s, id) || absorbed && s.merge.isDefined)
     if (todo.isEmpty) return Nil // committed: replay no-op
     // clear a crashed partial before any build lists the index (a build
     // may read the standing index, and must never see its own batch)
@@ -164,7 +165,7 @@ final case class StandingIndex(sinks: Seq[StandingIndex.Sink],
     }
 
   private def committed(s: Sink, id: Long): Boolean = s.layout match {
-    case Plain => IndexFs.exists(s"${s.at}/${dirName(id)}/_SUCCESS")
+    case Plain => s.committed(id)
     case _ => IndexFs.exists(s"$meta/batches/$id")
   }
 
@@ -193,34 +194,37 @@ final case class StandingIndex(sinks: Seq[StandingIndex.Sink],
     // a foreign file must not brick every future auto-id append
     val claimed = IndexFs.childNames(claims)
       .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-    var cand = (batchIds ++ claimed :+ compactedThrough).max + 1L
+    var cand = (Base +: compactedThrough +: (batchIds ++ claimed)).max + 1L
     while (!IndexFs.createExclusive(s"$claims/$cand")) cand += 1
     cand
   }
 
-  /** The compaction high-water mark: every batch with id ≤ this has been
-    * absorbed into the compacted batch, so a REPLAY of such a batch must
-    * not re-emit it (a df partial would double-count). -1 when never
+  /** The compaction high-water mark: every batch with id ≤ this (the
+    * base batch included) has been absorbed into the merged sinks'
+    * compacted batch, so a REPLAY of such a batch must not re-emit it
+    * there (a df partial would double-count). `Long.MinValue` when never
     * compacted. */
-  private def compactedThrough: Long =
-    IndexFs.readStringOpt(s"$meta/_COMPACTED").map(_.trim.toLong).getOrElse(-1L)
+  private def compactedThrough: Long = IndexFs.readStringOpt(s"$meta/_COMPACTED")
+    .map(_.trim.toLong).getOrElse(Long.MinValue)
 
-  /** COMPACTION: every sink rewritten as ONE batch under the highest
-    * existing id — through the sink's `merge` when it has one (the gram
-    * df partials merge by sum: a merged prefix is itself a valid partial,
-    * so `compact(any prefix of appends) then more appends == from-scratch`
-    * holds by associativity). After N appends, consumers stop paying the
-    * N-way in-bucket merge and the N-dir listing. The `_COMPACTED` mark
-    * is written BEFORE the rewrite, so replays of absorbed batches no-op
-    * from then on and later auto ids stay ahead.
+  /** COMPACTION: every sink with a `merge` rewritten through it as ONE
+    * batch under the highest existing id (the gram df partials merge by
+    * sum: a merged prefix is itself a valid partial, so `compact(any
+    * prefix of appends) then more appends == from-scratch` holds by
+    * associativity). After N appends, consumers stop paying the N-way
+    * in-bucket merge and the N-dir listing. A sink without a merge keeps
+    * its batches as written: its rows are already final, and the gram
+    * postings would cost an O(postings) rewrite to save a listing. The
+    * `_COMPACTED` mark is written BEFORE the rewrite, so replays of
+    * absorbed batches no-op in the merged sinks from then on and later
+    * auto ids stay ahead.
     *
-    * The ORPHAN GUARD first: a batch committed in some sinks but not all
-    * (a crash between the append's writes) must be REPLAYED before
-    * compaction — compacting would absorb its partial output while
-    * raising the mark over its id, and the replay's absorbed-skip would
-    * leave the missing sinks short forever. Inductively, ids at or below
-    * the mark were absorbed complete, so only ids above it can be
-    * orphans.
+    * The ORPHAN GUARD first: a batch that some sink has not committed (a
+    * crash inside or between the append's writes) must be REPLAYED
+    * before compaction — compacting would raise the mark over its id
+    * without its rows, and the replay's absorbed-skip would leave the
+    * merged sinks short forever. Inductively, ids at or below the mark
+    * were absorbed complete, so only ids above it can be orphans.
     *
     * Not atomic — a crash mid-compact can lose a sink, which is DERIVED
     * state rebuildable from the source; run it in the maintenance window,
@@ -228,19 +232,16 @@ final case class StandingIndex(sinks: Seq[StandingIndex.Sink],
   def compact(spark: SparkSession): Unit = {
     val mark = compactedThrough
     val ids = batchIds
-    val orphans = ids.filter(id => (id == Base || id > mark) && {
-      val done = sinks.map(committed(_, id))
-      done.contains(true) && done.contains(false)
-    })
+    val orphans = ids.filter(id => id > mark && sinks.exists(!committed(_, id)))
     require(orphans.isEmpty,
       s"standing index at $meta: batch(es) ${orphans.sorted.mkString(",")}" +
-        " are committed in some sinks but not all (crash between the" +
-        " append's writes?) — replay them (append with the same batchId)" +
-        " before compacting")
-    if (ids.size <= 1) return // nothing to merge
+        " are not committed in every sink (a crashed append?) — replay" +
+        " them (append with the same batchId) before compacting")
+    val merged = sinks.filter(_.merge.isDefined)
+    if (ids.size <= 1 || merged.isEmpty) return // nothing to merge
     val maxId = ids.max
     IndexFs.writeString(s"$meta/_COMPACTED", maxId.toString)
-    sinks.foreach { s =>
+    merged.foreach { s =>
       val tmp = s.path + "_compact_tmp"
       Scratch.track(tmp)
       s.scan(spark).write.mode("overwrite").parquet(tmp)
@@ -273,7 +274,9 @@ object StandingIndex {
   /** One sink: `build` turns the prepped batch into this sink's rows,
     * written under `layout` at `at` (a directory for Plain, a metastore
     * table name for Bucketed). `merge`, when given, folds the sink's
-    * per-batch partials into one — applied on scan and on compaction. */
+    * per-batch partials into one — applied on scan and by compaction,
+    * which rewrites only the sinks that have one ([[Concat]] for rows
+    * that merge by concatenation). */
   final case class Sink(name: String, at: String, layout: Layout,
                         build: DataFrame => DataFrame = identity,
                         merge: Option[DataFrame => DataFrame] = None) {
@@ -291,12 +294,19 @@ object StandingIndex {
       }
     }
 
-    /** The sink's rows, partials merged. A bucketed scan keeps the
-      * bucket-aware table read and drops the `batch` maintenance column,
-      * so consumers see the same schema as the plain layout. */
+    private[ops] def committed(id: Long): Boolean =
+      IndexFs.exists(s"$at/${dirName(id)}/_SUCCESS")
+
+    /** The sink's rows, partials merged. A plain scan reads the committed
+      * batch dirs only; a bucketed scan keeps the bucket-aware table read
+      * and drops the `batch` maintenance column, so consumers see the
+      * same schema as the plain layout. */
     private[ops] def scan(spark: SparkSession): DataFrame = {
       val raw = layout match {
-        case Plain => spark.read.option("recursiveFileLookup", "true").parquet(at)
+        case Plain =>
+          val dirs = ids.filter(committed).sorted.map(id => s"$at/${dirName(id)}")
+          require(dirs.nonEmpty, s"no committed batches at $at")
+          spark.read.parquet(dirs: _*)
         case _ => spark.table(at).drop("batch")
       }
       merge.fold(raw)(_(raw))
@@ -305,6 +315,10 @@ object StandingIndex {
 
   /** The reserved base batch id (ingest), outside every caller's id space. */
   val Base: Long = -1L
+
+  /** The merge of a sink whose per-batch rows are disjoint: compaction
+    * concatenates them into one batch. */
+  val Concat: Option[DataFrame => DataFrame] = Some(identity)
 
   private def dirName(id: Long): String = if (id == Base) "base" else s"batch_$id"
 }

@@ -484,6 +484,36 @@ class DedupSpec extends SparkSpec {
         .agg(sum(lit(1L)).as("df"))))
   }
 
+  test("a batch no sink committed (crash inside the first write) stays " +
+       "invisible to scans and blocks compaction until its replay") {
+    val docs = Tables.documents(spark, sf)
+    val root = java.nio.file.Files
+      .createTempDirectory("gram_crash_spec").toString + "/postings"
+    val a = docs.filter(col("doc_id") % 2 === 0)
+    val b = docs.filter(col("doc_id") % 2 =!= 0)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val ix = Dedup.gramIndex(root)
+    ix.append(a, batchId = 0)
+    ix.append(b, batchId = 1)
+    // crash inside batch 1's postings write: its files landed without
+    // the job's _SUCCESS, and its df partial was never written
+    graft.ops.Scratch.deleteRec(new java.io.File(s"$root/batch_1/_SUCCESS"))
+    graft.ops.Scratch.deleteRec(new java.io.File(s"${root}_df/batch_1"))
+    assert(rows(ix.scan(spark)) == rows(Dedup.gramPostings(a)),
+      "an uncommitted batch's files must stay invisible")
+    // compacting NOW would raise _COMPACTED over id 1 without its rows,
+    // and the replay's absorbed-skip would drop its df partial for good
+    val e = intercept[IllegalArgumentException](ix.compact(spark))
+    assert(e.getMessage.contains("replay"),
+      s"guard must point the operator at the repair: ${e.getMessage}")
+    ix.append(b, batchId = 1)
+    ix.compact(spark)
+    assert(rows(ix.scan(spark)) == rows(Dedup.gramPostings(docs)))
+    assert(rows(ix.scan(spark, "df")) ==
+      rows(Dedup.gramPostings(docs).groupBy("g").agg(sum(lit(1L)).as("df"))))
+  }
+
   test("gram index compact: compact(any prefix of appends) + more appends " +
        "== from-scratch; sidecar partial count is bounded after compaction") {
     val docs = Tables.documents(spark, sf)
